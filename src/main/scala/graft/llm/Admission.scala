@@ -367,7 +367,7 @@ object Admission {
     }.map(_.toString)
     require(keep.nonEmpty, s"no seeded store under $root (write the " +
       "initial corpus under a subdir, e.g. mb_init)")
-    s.read.option("recursiveFileLookup", "true").parquet(keep.toSeq: _*)
+    graft.core.Tables.readParquet(s, keep.toSeq, recursive = true)
   }
 
   /** ONE micro-batch step of the streaming PARAGRAPH-CLEANING service
@@ -490,8 +490,8 @@ object Admission {
     }.flatMap(s => scala.util.Try(s.toLong).toOption)
       .foldLeft(-1L)(math.max) + 1
     val tmp = new org.apache.hadoop.fs.Path(root, s".compact_tmp_$gen")
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(fold.map(_.toString).toSeq: _*)
+    graft.core.Tables.readParquet(spark, fold.map(_.toString).toSeq,
+        recursive = true)
       .write.mode("overwrite").parquet(tmp.toString)
     fold.foreach { p =>
       fs.rename(p, new org.apache.hadoop.fs.Path(root,

@@ -257,7 +257,7 @@ object Bpe {
     * to encode anything), never corpus-sized. SpansSpec pins the
     * round-trip: encode(load(save(train))) == encode(train). */
   def loadMergePairs(spark: SparkSession, path: String): Seq[(String, String)] =
-    spark.read.parquet(path)
+    graft.core.Tables.readParquet(spark, Seq(path), recursive = false)
       .orderBy(col("merge_rank"))
       .select(col("lhs"), col("rhs"))
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq

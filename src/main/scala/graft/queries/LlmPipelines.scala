@@ -2904,7 +2904,8 @@ object LlmPipelines {
       // sf1): +2 AQE stage-jobs, no wall/cpu win, and the shared form
       // structurally LOSES the `lang = 'en'` scan pushdown the
       // en-slice subtrees get here — at a selective slice the two-LM
-      // form reads less data, not more. See OPTIMIZATION_r18.md.
+      // form reads less data, not more. See SCALE.md, "Round-18
+      // refinements".
       val tgt = LangModel.trainBigramLm(
         corpus.where(col("lang") === "en"), "text")
       val src = LangModel.trainBigramLm(corpus, "text")

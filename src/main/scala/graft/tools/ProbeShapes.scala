@@ -71,9 +71,10 @@ object ProbeShapes {
       LangModel.trainBigramLm(corpus.where(col("lang") === "en"), "text"),
       LangModel.trainBigramLm(corpus, "text"))
     // the REFUTED r18 shared-aggregation pair trainer, kept here as
-    // the measured-and-rejected shape (see OPTIMIZATION_r18.md): one
-    // (all, en-slice) conditional count per n-gram order feeds both
-    // LMs; loses the en-slice scan pushdown and won nothing locally
+    // the measured-and-rejected shape (SCALE.md, "Round-18
+    // refinements"): one (all, en-slice) conditional count per n-gram
+    // order feeds both LMs; loses the en-slice scan pushdown and won
+    // nothing locally
     def q100Pair(): DataFrame = {
       val slice = col("lang") === "en"
       val w0 = graft.llm.Bpe.alnumTokens(col("text"))
