@@ -41,10 +41,12 @@ object Caching {
 
   /** Persist `df` and force it NOW (single job), so downstream branches
     * never race to build it. Callers own the lifecycle; Bench/Verify
-    * clearCache() between queries, and long-running service entry
-    * points (e.g. `Admission.processMicroBatch`) wrap each arrival in
-    * [[scoped]] so per-arrival caches never accumulate across the
-    * service's lifetime.
+    * clearCache() between queries, and the admission service entry
+    * points (`Admission.processMicroBatch` and its multimodal twin)
+    * wrap each arrival in [[scoped]], which releases the arrival's one
+    * batch frame and the probe's candidate caches together, so
+    * per-arrival caches never accumulate across the service's
+    * lifetime.
     */
   def eager(df: DataFrame): DataFrame = eagerCounted(df)._1
 

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,6 +21,75 @@ import org.apache.spark.sql.functions._
   * interleaving of a batch's contents. */
 object Admission {
 
+  /** A batch that carries one id on more than one row. Admission keys
+    * every per-row artifact by id (audit rows, band-index rows, media
+    * fingerprints), and the arrival frame folds each row's MinHash
+    * bands on its own, where the corpus index's `groupBy(id)` banding
+    * would merge the repeated rows' shingle sets. Such a batch is
+    * rejected before any store or audit row is written. */
+  final class RepeatedIdException(val idCol: String, val id: Any)
+    extends IllegalArgumentException(
+      s"arriving batch repeats $idCol = $id; admission needs one row per id")
+
+  // arrival-frame media columns: (id, fingerprint) per modality
+  private val ImageFp = "__img"
+  private val AudioFp = "__aud"
+
+  /** The arriving batch as ONE cached frame, built from a single read
+    * of `batch`: the id and text columns plus every per-row artifact
+    * the audit legs and the store appends read — `gate_pass`
+    * ([[Quality.scored]]), `fp` ([[TextStats.fingerprint]]), `__sh`
+    * (order-2 shingles, the probe's declared order) and `__bands`
+    * ([[Dedup.bandHashes]] over them), plus one fingerprint column per
+    * entry of `media` (name → kernel over the batch's payload column).
+    *
+    * One materialization per arrival: every consumer below is a
+    * projection of cached batch-sized rows, so the batch plan (for a
+    * stream source, one source read) runs once, and the band hashes
+    * are folded per row instead of by a signature shuffle. The
+    * materializing job collects the ids for the repeated-id check
+    * ([[RepeatedIdException]]); their number is the row count
+    * returned. The ids land on the driver, which the audit's batch-id
+    * broadcast needs anyway. Registers in the caller's
+    * `Caching.scoped` block. */
+  private def arrivalFrame(batch: DataFrame, idCol: String, textCol: String,
+                           media: Seq[(String, Column)] = Nil): (DataFrame, Long) = {
+    val frame = Quality.scored(batch.select(
+        Seq(col(idCol), col(textCol)) ++ media.map { case (n, e) => e.as(n) }: _*),
+        textCol)
+      .select(Seq(col(idCol), col(textCol),
+        col("quality_kept").as("gate_pass"),
+        TextStats.fingerprint(col(textCol)).as("fp"),
+        Dedup.shingles(col(textCol), 2).as("__sh")) ++
+        media.map { case (n, _) => col(n) }: _*)
+      .withColumn("__bands", Dedup.bandHashes(col("__sh")))
+    // persisted directly, not by Caching.eager: the materializing job
+    // collects the ids instead of counting them, so the check below
+    // costs no second job over the cache
+    val b = frame.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ids = b.select(col(idCol)).collect().map(_.get(0))
+    graft.core.Caching.register(b)
+    val distinct = new java.util.HashSet[Any]()
+    ids.find(!distinct.add(_)).foreach { id =>
+      b.unpersist(false)
+      throw new RepeatedIdException(idCol, id)
+    }
+    (b, ids.length.toLong)
+  }
+
+  /** The media fingerprint columns of [[arrivalFrame]] for the image
+    * and audio payload columns (the codegen kernels). */
+  private def mediaColumns(imageCol: String,
+                           audioCol: String): Seq[(String, Column)] = Seq(
+    ImageFp -> graft.functions.PerceptualHash.d_hash(col(imageCol)),
+    AudioFp -> graft.functions.AudioFingerprint.audio_fp(col(audioCol)))
+
+  /** `(id: long, sh)` media fingerprint rows of `df`, null
+    * fingerprints (undecodable or absent media) dropped. */
+  private def mediaFp(df: DataFrame, idCol: String, fp: Column): DataFrame =
+    df.select(col(idCol).cast("long").as("id"), fp.as("sh"))
+      .where(col("sh").isNotNull)
+
   /** The per-doc audit table for one arriving batch against a frozen
     * `seen` corpus (id + text) and its band `index`
     * ([[Dedup.minhashBandIndex]] rows over exactly `seen`):
@@ -29,7 +98,8 @@ object Admission {
     * passes a PERSISTED fingerprint store instead
     * ([[auditWithFps]]): recomputing md5 over the whole seen corpus
     * per arriving batch is an O(corpus)-per-batch term the stored
-    * artifact exists to avoid. */
+    * artifact exists to avoid. The batch must carry each id once
+    * ([[RepeatedIdException]]). */
   def audit(seen: DataFrame, batch: DataFrame, idCol: String,
             textCol: String, index: DataFrame,
             threshold: Double = 0.8): DataFrame =
@@ -44,22 +114,19 @@ object Admission {
     * fingerprint-scanned. */
   def auditWithFps(seen: DataFrame, batch: DataFrame, idCol: String,
                    textCol: String, index: DataFrame, fps: DataFrame,
-                   threshold: Double = 0.8): DataFrame = {
-    // batch-bounded cache: the gate/fingerprint columns feed the
-    // membership broadcast AND the stream side of the exact leg — and
-    // if `batch` is an expensive plan (a filtered table, a stream
-    // source), every leg would otherwise replay it. The SHINGLES ride
-    // the same cache (r18): the probe's batch shingle table previously
-    // had its own eager cache — one more sequential materialization
-    // barrier per audit — but it derives from the same batch text this
-    // cache already scans, so computing it here costs one more column
-    // and saves a whole blocking job. Text itself is NOT cached: every
-    // downstream consumer reads only (id, gate_pass, fp, sh).
-    val gated = graft.core.Caching.eager(Quality.scored(
-        batch.select(col(idCol), col(textCol)), textCol)
-      .select(col(idCol), col("quality_kept").as("gate_pass"),
-        TextStats.fingerprint(col(textCol)).as("fp"),
-        Dedup.shingles(col(textCol), 2).as("__sh")))
+                   threshold: Double = 0.8): DataFrame =
+    auditArrival(seen, arrivalFrame(batch, idCol, textCol)._1, idCol,
+      textCol, index, fps, threshold)
+
+  /** The audit body every entry point shares, over an [[arrivalFrame]]
+    * `b`. Each leg reads a bare projection of `b`: the gate and
+    * fingerprint columns feed the membership broadcast and the exact
+    * leg, the shingles and band hashes feed the probe, and the ids
+    * feed the near-dup flag joins. No leg re-reads the batch plan or
+    * adds a batch-sized cache. */
+  private def auditArrival(seen: DataFrame, b: DataFrame, idCol: String,
+                           textCol: String, index: DataFrame, fps: DataFrame,
+                           threshold: Double): DataFrame = {
     // Membership the scan-shaped way: the store is read ONCE and
     // semi-joined against the BROADCAST batch fingerprints, so the
     // corpus side is never shuffled (the distinct-then-left-join form
@@ -71,24 +138,22 @@ object Admission {
     // broadcast build. The OUTER distinct stays: `hits` feeds a LEFT
     // join whose duplicate build rows would duplicate audit rows.
     val hits = fps.select(col("fp"))
-      .join(broadcast(gated.select(col("fp"))),
-        Seq("fp"), "left_semi")
+      .join(broadcast(b.select(col("fp"))), Seq("fp"), "left_semi")
       .distinct()
     val wFp = Window.partitionBy(col("fp"))
-    val exact = gated
+    val exact = b.select(col(idCol), col("gate_pass"), col("fp"))
       .join(broadcast(hits.withColumn("__in_seen", lit(true))),
         Seq("fp"), "left")
       .withColumn("exact_dup",
         coalesce(col("__in_seen"), lit(false)) ||
           col(idCol) > min(col(idCol)).over(wFp))
-    // the probe reads the batch shingles from the SAME cache (a bare
-    // projection of cached batch-sized rows per consumer, no second
-    // barrier); shingle order 2 here matches minhashProbePairs'
-    // default, which is the audit's declared contract
+    // the probe reads the batch shingles and band rows from the SAME
+    // cache; shingle order 2 matches minhashProbePairs' default, which
+    // is the audit's declared contract
     val pairs = Dedup.minhashProbePairsFromSh(seen,
-      gated.select(col(idCol).cast("long").as("id"), col("__sh").as("sh")),
-      idCol, textCol, index, threshold)
-    val batchIds = gated.select(col(idCol).cast("long").as("__bid"))
+      b.select(col(idCol).cast("long").as("id"), col("__sh").as("sh")),
+      Dedup.bandRows(b, idCol, "__bands"), idCol, textCol, index, threshold)
+    val batchIds = b.select(col(idCol).cast("long").as("__bid"))
     // both pair orientations from ONE pass over `pairs` (an uncached
     // verify-join subtree — the two-leg union form re-ran it per leg;
     // r17, same rewrite in q95's expansion)
@@ -136,11 +201,12 @@ object Admission {
     * STALENESS TRIGGER for [[Dedup.ProbeBroadcastKeyedRows]]: that
     * bound (250k) was set by an A/B run with the probe EMBEDDED in
     * exactly this consumption shape — the probe output collected
-    * under the explicit `broadcast(img/aud)` flag joins below. If
-    * this method (or any new consumer) stops consuming the probe
-    * under a broadcast flag join, the embedded measurement no longer
-    * describes the plan; re-run the A/B (both q103-at-sf10 legs,
-    * bound scaladoc has the numbers) before trusting the bound. */
+    * under the explicit `broadcast(img/aud)` flag joins of
+    * [[withMediaFlags]]. If those joins (or any new consumer) stop
+    * consuming the probe under a broadcast flag join, the embedded
+    * measurement no longer describes the plan; re-run the A/B (both
+    * q103-at-sf10 legs, bound scaladoc has the numbers) before
+    * trusting the bound. */
   def auditMultimodalWithFps(seen: DataFrame, batch: DataFrame,
                              idCol: String, textCol: String,
                              index: DataFrame, fps: DataFrame,
@@ -148,21 +214,47 @@ object Admission {
                              batchImageFp: DataFrame,
                              batchAudioFp: DataFrame,
                              threshold: Double = 0.8,
-                             maxHamming: Int = 7): DataFrame = {
-    def touchFlag(store: DataFrame, batchFp: DataFrame,
-                  flag: String): DataFrame =
-      Dedup.hammingProbeTouch(store, batchFp, maxHamming = maxHamming)
-        .select(col("id").as(s"__${flag}_id"))
-        .withColumn(s"__$flag", lit(true))
-    val img = touchFlag(imageFps, batchImageFp, "img")
-    val aud = touchFlag(audioFps, batchAudioFp, "aud")
+                             maxHamming: Int = 7): DataFrame =
+    withMediaFlags(auditWithFps(seen, batch, idCol, textCol, index, fps,
+        threshold), idCol,
+      Dedup.hammingProbeTouch(imageFps, batchImageFp, maxHamming = maxHamming),
+      Dedup.hammingProbeTouch(audioFps, batchAudioFp, maxHamming = maxHamming))
+
+  /** The multimodal audit body over an [[arrivalFrame]] `b` built with
+    * [[mediaColumns]] and its row count `n`: both media probes read
+    * their batch fingerprints from `b` (`n` is the upper bound
+    * [[Dedup.hammingProbeTouchCached]] takes), so no leg adds a
+    * batch-sized cache. */
+  private def auditMultimodalArrival(seen: DataFrame, b: DataFrame, n: Long,
+                                     idCol: String, textCol: String,
+                                     index: DataFrame, fps: DataFrame,
+                                     imageFps: DataFrame, audioFps: DataFrame,
+                                     threshold: Double,
+                                     maxHamming: Int): DataFrame =
+    withMediaFlags(auditArrival(seen, b, idCol, textCol, index, fps,
+        threshold), idCol,
+      Dedup.hammingProbeTouchCached(imageFps, mediaFp(b, idCol, col(ImageFp)), n,
+        maxHamming = maxHamming),
+      Dedup.hammingProbeTouchCached(audioFps, mediaFp(b, idCol, col(AudioFp)), n,
+        maxHamming = maxHamming))
+
+  /** The text audit plus the two media flags from the probes' touched
+    * ids; admitted iff all five legs clear. */
+  private def withMediaFlags(textAudit: DataFrame, idCol: String,
+                             imgTouched: DataFrame,
+                             audTouched: DataFrame): DataFrame = {
+    def flag(touched: DataFrame, name: String): DataFrame =
+      touched.select(col("id").as(s"__${name}_id"))
+        .withColumn(s"__$name", lit(true))
     // both flag sets are batch-bounded → broadcast, never a shuffle of
     // the audit side. The probe ids are long (the fingerprint builders
     // cast the doc id), so cast the audit side explicitly — an implicit
     // string==long comparison can null out and silently drop flags.
-    auditWithFps(seen, batch, idCol, textCol, index, fps, threshold)
-      .join(broadcast(img), col(idCol).cast("long") === col("__img_id"), "left")
-      .join(broadcast(aud), col(idCol).cast("long") === col("__aud_id"), "left")
+    textAudit
+      .join(broadcast(flag(imgTouched, "img")),
+        col(idCol).cast("long") === col("__img_id"), "left")
+      .join(broadcast(flag(audTouched, "aud")),
+        col(idCol).cast("long") === col("__aud_id"), "left")
       .withColumn("image_dup", coalesce(col("__img"), lit(false)))
       .withColumn("audio_dup", coalesce(col("__aud"), lit(false)))
       .withColumn("admitted",
@@ -175,24 +267,23 @@ object Admission {
   /** One-shot [[auditMultimodalWithFps]] over payload columns: media
     * fingerprints for BOTH sides are computed inline (image dHash,
     * audio energy-gradient fp — the codegen kernels), the form a
-    * single frozen audit takes. The service path persists the media
-    * fingerprint stores instead ([[processMultimodalMicroBatch]]):
-    * re-hashing every seen payload per arriving batch is the
-    * O(corpus)-per-batch term the stores exist to avoid. */
+    * single frozen audit takes; the batch side hashes its payloads
+    * into the same arrival frame the service path uses. The service
+    * path persists the media fingerprint stores instead
+    * ([[processMultimodalMicroBatch]]): re-hashing every seen payload
+    * per arriving batch is the O(corpus)-per-batch term the stores
+    * exist to avoid. */
   def auditMultimodal(seen: DataFrame, batch: DataFrame, idCol: String,
                       textCol: String, imageCol: String, audioCol: String,
                       index: DataFrame, threshold: Double = 0.8,
                       maxHamming: Int = 7): DataFrame = {
-    def imgFp(df: DataFrame) = df.select(col(idCol).cast("long").as("id"),
-        graft.functions.PerceptualHash.d_hash(col(imageCol)).as("sh"))
-      .where(col("sh").isNotNull)
-    def audFp(df: DataFrame) = df.select(col(idCol).cast("long").as("id"),
-        graft.functions.AudioFingerprint.audio_fp(col(audioCol)).as("sh"))
-      .where(col("sh").isNotNull)
-    auditMultimodalWithFps(seen, batch, idCol, textCol, index,
+    val media = mediaColumns(imageCol, audioCol)
+    val Seq(imgFps, audFps) = media.map { case (_, kernel) =>
+      mediaFp(seen, idCol, kernel) }
+    val (b, n) = arrivalFrame(batch, idCol, textCol, media)
+    auditMultimodalArrival(seen, b, n, idCol, textCol, index,
       seen.select(TextStats.fingerprint(col(textCol)).as("fp")),
-      imgFp(seen), audFp(seen), imgFp(batch), audFp(batch),
-      threshold, maxHamming)
+      imgFps, audFps, threshold, maxHamming)
   }
 
   /** ONE micro-batch step of the streaming admission service — the
@@ -225,7 +316,8 @@ object Admission {
     * batch's own rows from the first attempt ARE already in the
     * stores, the audit must not see them: subdir isolation makes the
     * exclusion explicit by reading everything EXCEPT this batchId's
-    * subdirs).
+    * subdirs). A batch that repeats an id throws
+    * [[RepeatedIdException]] before anything is written.
     *
     * Equality contract, stated exactly: with ids monotone ACROSS
     * micro-batches, the cumulative audits equal the one-shot [[audit]]
@@ -246,28 +338,36 @@ object Admission {
     val seen = readStoreExceptSelf(s, seenDir, batchId)
     val index = readStoreExceptSelf(s, indexDir, batchId)
     val fps = readStoreExceptSelf(s, fpsDir, batchId)
-    // Batch-sized cache for the arrival itself: six consumers below
-    // (audit legs + three store appends) would each replay the
-    // arriving batch's plan — for a foreachBatch source that is one
-    // source read per consumer, and per-arrival cost must not depend
-    // on how expensive that plan is.
-    val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Caching.scoped: auditWithFps and the probe it calls eager-cache
-    // batch-sized internals; a long-running service calls this once per
-    // arrival, so without the scope each arrival would leak one
-    // MEMORY_AND_DISK block per internal cache for the service's
-    // lifetime. All four writes below are actions, so everything the
-    // caches feed is fully materialized before the scope releases them.
-    try graft.core.Caching.scoped {
-      auditWithFps(seen, b, idCol, textCol, index, fps, threshold)
+    // Caching.scoped: the arrival frame and the probe's candidate
+    // caches are per-arrival; a long-running service calls this once
+    // per arrival, so without the scope each arrival would leak its
+    // MEMORY_AND_DISK blocks for the service's lifetime. Every write
+    // below is an action, so everything the caches feed is fully
+    // materialized before the scope releases them. The audit and the
+    // three appends all read the ONE arrival frame, so the batch plan
+    // (a foreachBatch source read) runs once per arrival, however
+    // expensive it is.
+    graft.core.Caching.scoped {
+      val (b, _) = arrivalFrame(batch, idCol, textCol)
+      auditArrival(seen, b, idCol, textCol, index, fps, threshold)
         .write.mode("overwrite").parquet(s"$auditDir/mb_$batchId")
-      b.select(col(idCol), col(textCol))
-        .write.mode("overwrite").parquet(s"$seenDir/mb_$batchId")
-      Dedup.minhashBandIndex(b, idCol, textCol)
-        .write.mode("overwrite").parquet(s"$indexDir/mb_$batchId")
-      b.select(TextStats.fingerprint(col(textCol)).as("fp"))
-        .write.mode("overwrite").parquet(s"$fpsDir/mb_$batchId")
-    } finally b.unpersist()
+      appendText(b, batchId, idCol, textCol, seenDir, indexDir, fpsDir)
+    }
+  }
+
+  /** The text stores' appends from an arrival frame: the seen docs, the
+    * band-index rows (the frame's per-row bands, unfolded map-side —
+    * the [[Dedup.minhashBandIndex]] row set, no re-shingling) and the
+    * fingerprints, each `mb_<batchId>` overwrite-idempotent. */
+  private def appendText(b: DataFrame, batchId: Long, idCol: String,
+                         textCol: String, seenDir: String,
+                         indexDir: String, fpsDir: String): Unit = {
+    b.select(col(idCol), col(textCol))
+      .write.mode("overwrite").parquet(s"$seenDir/mb_$batchId")
+    Dedup.bandRows(b, idCol, "__bands")
+      .write.mode("overwrite").parquet(s"$indexDir/mb_$batchId")
+    b.select(col("fp"))
+      .write.mode("overwrite").parquet(s"$fpsDir/mb_$batchId")
   }
 
   /** ONE micro-batch step of the MULTIMODAL admission service — the
@@ -308,32 +408,22 @@ object Admission {
     val fps = readStoreExceptSelf(s, fpsDir, batchId)
     val imgFps = readStoreExceptSelf(s, imgFpDir, batchId)
     val audFps = readStoreExceptSelf(s, audFpDir, batchId)
-    val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // per-arrival cache scope ([[processMicroBatch]]'s leak-fix
-    // reasoning); the media kernels run inside it, so each payload is
-    // hashed once per arrival and the batch fp frames feed both the
-    // audit probes and the store appends from cache
-    try graft.core.Caching.scoped {
-      val bImg = graft.core.Caching.eager(
-        b.select(col(idCol).cast("long").as("id"),
-            graft.functions.PerceptualHash.d_hash(col(imageCol)).as("sh"))
-          .where(col("sh").isNotNull))
-      val bAud = graft.core.Caching.eager(
-        b.select(col(idCol).cast("long").as("id"),
-            graft.functions.AudioFingerprint.audio_fp(col(audioCol)).as("sh"))
-          .where(col("sh").isNotNull))
-      auditMultimodalWithFps(seen, b, idCol, textCol, index, fps,
-          imgFps, audFps, bImg, bAud, threshold, maxHamming)
+    // per-arrival cache scope ([[processMicroBatch]]'s reasoning); the
+    // media kernels run inside the arrival frame's one materialization,
+    // so each payload is hashed once per arrival and the fingerprints
+    // feed both the audit probes and the store appends from it
+    graft.core.Caching.scoped {
+      val (b, n) = arrivalFrame(batch, idCol, textCol,
+        mediaColumns(imageCol, audioCol))
+      auditMultimodalArrival(seen, b, n, idCol, textCol, index, fps,
+          imgFps, audFps, threshold, maxHamming)
         .write.mode("overwrite").parquet(s"$auditDir/mb_$batchId")
-      b.select(col(idCol), col(textCol))
-        .write.mode("overwrite").parquet(s"$seenDir/mb_$batchId")
-      Dedup.minhashBandIndex(b, idCol, textCol)
-        .write.mode("overwrite").parquet(s"$indexDir/mb_$batchId")
-      b.select(TextStats.fingerprint(col(textCol)).as("fp"))
-        .write.mode("overwrite").parquet(s"$fpsDir/mb_$batchId")
-      bImg.write.mode("overwrite").parquet(s"$imgFpDir/mb_$batchId")
-      bAud.write.mode("overwrite").parquet(s"$audFpDir/mb_$batchId")
-    } finally b.unpersist()
+      appendText(b, batchId, idCol, textCol, seenDir, indexDir, fpsDir)
+      mediaFp(b, idCol, col(ImageFp))
+        .write.mode("overwrite").parquet(s"$imgFpDir/mb_$batchId")
+      mediaFp(b, idCol, col(AudioFp))
+        .write.mode("overwrite").parquet(s"$audFpDir/mb_$batchId")
+    }
   }
 
   /** The readable view of an mb_ store for batch `batchId`: every
@@ -493,11 +583,18 @@ object Admission {
     graft.core.Tables.readParquet(spark, fold.map(_.toString).toSeq,
         recursive = true)
       .write.mode("overwrite").parquet(tmp.toString)
+    // every rename is checked: a `false` that went unnoticed would let
+    // the deletes below drop the only readable copy of the folded rows.
+    // A failure throws inside the crash window, which
+    // readStoreExceptSelf and the next run's recovery already handle.
     fold.foreach { p =>
-      fs.rename(p, new org.apache.hadoop.fs.Path(root,
-        s".folded_${gen}_${p.getName}"))
+      val folded = new org.apache.hadoop.fs.Path(root,
+        s".folded_${gen}_${p.getName}")
+      require(fs.rename(p, folded), s"fold rename failed: $p -> $folded")
     }
-    fs.rename(tmp, new org.apache.hadoop.fs.Path(root, s"mb_compact_$gen"))
+    val compact = new org.apache.hadoop.fs.Path(root, s"mb_compact_$gen")
+    require(fs.rename(tmp, compact),
+      s"compaction rename failed: $tmp -> $compact")
     fold.foreach { p =>
       fs.delete(new org.apache.hadoop.fs.Path(root,
         s".folded_${gen}_${p.getName}"), true)

@@ -177,12 +177,15 @@ object Dedup {
     * argument types and fold order the `xxhash64(...)` columns use
     * (seed 42; `lit(j)`/`lit(b)` are IntegerType, h1/h2/mh are
     * LongType; multi-arg calls fold left-to-right through the
-    * accumulated seed). This is the STREAMING form of the signature:
-    * a stream row carries the whole document, so the batch side's
-    * explode→agg (built to get map-side combine across its shuffle)
-    * degenerates to a per-doc fold — one pass over the shingles, no
-    * shuffle, no interpreted HOF tree. StreamingSpec pins the parity
-    * end-to-end (stream candidate set == batch candidate set). */
+    * accumulated seed). This is the PER-ROW form of the signature,
+    * used by the streaming twin and (as the [[bandHashes]] column) by
+    * the admission arrival frame: a row carries the whole document,
+    * so the batch side's explode→agg (built to get map-side combine
+    * across its shuffle) degenerates to a per-doc fold — one pass over
+    * the shingles, no shuffle, no interpreted HOF tree. StreamingSpec
+    * pins the parity end-to-end (stream candidate set == batch
+    * candidate set), AdmissionSpec pins the arrival's index rows
+    * against [[minhashBandIndex]]. */
   private[graft] def bandHashesLocal(shingles: Seq[String], bands: Int,
                                      rows: Int): Array[Long] = {
     import org.apache.spark.sql.catalyst.expressions.XxHash64Function
@@ -217,6 +220,31 @@ object Dedup {
       seed
     }
   }
+
+  /** [[bandHashesLocal]] as a per-row column over an `array<string>`
+    * shingle column: each document's `bands` band hashes in band
+    * order, null for a null or empty shingle set (the explode in
+    * [[bandedSignatures]] emits no rows for those). This is the fused
+    * form of the batch banding: one pass over each row's shingles, no
+    * explode and no shuffle, so a cached batch frame can carry its
+    * bands as one more column ([[bandRows]] unfolds them). It equals
+    * [[bandedSignatures]] row for row on unique ids; rows sharing an
+    * id are the one divergence, since the batch form's `groupBy(id)`
+    * merges their shingle sets into one signature. */
+  private[graft] def bandHashes(sh: Column, bands: Int = 16,
+                                rows: Int = 4): Column =
+    udf { (s: Seq[String]) =>
+      if (s == null || s.isEmpty) null
+      else bandHashesLocal(s, bands, rows).toSeq
+    }.apply(sh)
+
+  /** `(id: long, band, band_hash)` rows from a frame carrying a
+    * [[bandHashes]] column: the [[minhashBandIndex]] row shape, by a
+    * map-side `posexplode` (band = position). */
+  private[graft] def bandRows(df: DataFrame, idCol: String,
+                              bandsCol: String): DataFrame =
+    df.select(col(idCol).cast("long").as("id"),
+      posexplode(col(bandsCol)).as(Seq("band", "band_hash")))
 
   /** Distinct (id_a < id_b) pairs from per-bucket member lists,
     * dropping singleton and oversized buckets. Shared by the MinHash
@@ -374,25 +402,26 @@ object Dedup {
     val newSh = graft.core.Caching.eager(
       newDocs.select(col(idCol).cast("long").as("id"),
         shingles(col(textCol), shingleN).as("sh")))
-    minhashProbePairsFromSh(corpus, newSh, idCol, textCol, index,
-      threshold, shingleN, bands, rows, maxBucketSize)
+    minhashProbePairsFromSh(corpus, newSh,
+      bandedSignatures(newSh, bands, rows), idCol, textCol, index,
+      threshold, shingleN, maxBucketSize)
   }
 
   /** [[minhashProbePairs]] over the batch's ALREADY-MATERIALIZED
-    * `(id: long, sh: array<string>)` shingle table — the caller must
-    * pass a cached/persisted frame (it feeds the banding AND both
-    * verify sides; a lazy plan would re-run its lineage once per
-    * consumer). Exists so a caller that already caches a batch-sized
-    * frame carrying the shingles (the admission audit's gate/
-    * fingerprint cache) pays ONE batch materialization barrier, not
-    * two (r18). */
+    * `(id: long, sh: array<string>)` shingle table and its
+    * `(id, band, band_hash)` rows — the caller must pass frames read
+    * from a cache (`newSh` feeds both verify sides, `newBanded` the
+    * union and the hot-bucket broadcast; a lazy plan would re-run its
+    * lineage once per consumer). Exists so a caller that already
+    * caches a batch-sized frame carrying the shingles and their
+    * [[bandHashes]] (the admission arrival frame) pays ONE batch
+    * materialization barrier and no signature shuffle. `newBanded`
+    * must use the index's band geometry. */
   private[graft] def minhashProbePairsFromSh(corpus: DataFrame,
-                        newSh: DataFrame,
+                        newSh: DataFrame, newBanded: DataFrame,
                         idCol: String, textCol: String, index: DataFrame,
                         threshold: Double, shingleN: Int = 2,
-                        bands: Int = 16, rows: Int = 4,
                         maxBucketSize: Int = 500): DataFrame = {
-    val newBanded = bandedSignatures(newSh, bands, rows)
     val unioned = index
       .select(col("id").cast("long").as("id"), col("band"), col("band_hash"))
       .withColumn("is_new", lit(false))
@@ -920,7 +949,9 @@ object Dedup {
     * invoke this inside a `Caching.scoped` block spanning the
     * consuming action — the admission service entry points do — or
     * clearCache afterwards; otherwise each call leaks one batch-sized
-    * MEMORY_AND_DISK block.
+    * MEMORY_AND_DISK block. A caller that already holds the batch
+    * fingerprints in a cache calls [[hammingProbeTouchCached]]
+    * instead, which adds no cache on the brute path.
     *
     * Geometry defaults to [[autoGeometry]] (`blocks = keyBlocks = 0`)
     * — (9, 2) at the default maxHamming=7, unchanged from the
@@ -930,36 +961,33 @@ object Dedup {
                         blocks: Int = 0, maxHamming: Int = 7,
                         keyBlocks: Int = 0,
                         bruteBelow: Long = 2048): DataFrame = {
-    if (blocks == 0 || keyBlocks == 0) {
-      require(blocks == 0 && keyBlocks == 0,
-        s"auto-sizing takes BOTH blocks=0 and keyBlocks=0 (got " +
-          s"blocks=$blocks keyBlocks=$keyBlocks) — the two are sized " +
-          "jointly; override both or neither")
-      val (b, k) = autoGeometry(maxHamming)
-      return hammingProbeTouch(storeFp, batchFp, b, maxHamming, k,
-        bruteBelow)
-    }
-    require(blocks >= 1 && blocks <= 64, s"blocks out of range: $blocks")
-    require(maxHamming >= 0 && maxHamming < blocks,
-      s"exhaustive only for hamming < blocks: blocks=$blocks maxHamming=$maxHamming")
-    require(keyBlocks >= 1 && keyBlocks <= blocks - maxHamming,
-      s"pigeonhole needs keyBlocks <= blocks - maxHamming: " +
-        s"blocks=$blocks maxHamming=$maxHamming keyBlocks=$keyBlocks")
-    // loud guard on EXPLICIT geometry, [[hammingCandidatesFromFp]]'s
-    // [[ComboCap]] applied to the probe too — and the overflow-safe
-    // Long count is what bkRows multiplies below, so a pathological
-    // geometry (e.g. blocks=40, keyBlocks=20 ≈ 1.4e11 combinations)
-    // fails HERE instead of hanging the driver enumerating
-    // combinations or overflowing `.size`'s Int
-    val nCombos = {
-      val c = binomAtMost(blocks, keyBlocks, ComboCap)
-      require(c <= ComboCap,
-        s"C($blocks, $keyBlocks) = ${if (c > ComboCap) s">$ComboCap" else c} " +
-          s"combination keys; pick a narrower geometry (cap $ComboCap)")
-      c
-    }
+    // geometry is checked before the batch is cached, so a bad
+    // argument leaves no cache behind
+    touchGeometry(blocks, maxHamming, keyBlocks)
     val (bf, nBatch) = graft.core.Caching.eagerCounted(
       batchFp.select(col("id"), col("sh")))
+    hammingProbeTouchCached(storeFp, bf, nBatch, blocks, maxHamming,
+      keyBlocks, bruteBelow)
+  }
+
+  /** [[hammingProbeTouch]] over a batch fingerprint frame `bf` (`id`,
+    * `sh`, non-null sh) that the caller reads from its OWN cache, e.g.
+    * a projection and null filter of a cached arrival frame.
+    *
+    * Cache contract: `bf` must read from a cache, since it feeds both
+    * legs and is not cached again here; the banding path still caches
+    * its keyed batch rows, so the `Caching.scoped` rule above applies.
+    * `nBatch` is an UPPER BOUND on `bf`'s row count, such as the row
+    * count of the cached frame before the null filter. It steers only
+    * the size dispatch (brute path at or under `bruteBelow`) and the
+    * broadcast bound of the banding joins, both exact either way; an
+    * overestimate can only pick the banding path or a merge join
+    * where the true count would not. A `bf` with zero rows returns no
+    * ids on either path. */
+  private[graft] def hammingProbeTouchCached(storeFp: DataFrame,
+      bf: DataFrame, nBatch: Long, blocks: Int = 0, maxHamming: Int = 7,
+      keyBlocks: Int = 0, bruteBelow: Long = 2048): DataFrame = {
+    val (b, kb, nCombos) = touchGeometry(blocks, maxHamming, keyBlocks)
     if (nBatch == 0L)
       return bf.select(col("id")).limit(0)
     if (nBatch <= bruteBelow) {
@@ -986,7 +1014,7 @@ object Dedup {
       return vsStore.unionByName(vsBatch).distinct()
     }
     def keyed(fp: DataFrame): DataFrame = fp.select(col("id"), col("sh"),
-      posexplode(array(comboKeyExprs(col("sh"), blocks, keyBlocks): _*))
+      posexplode(array(comboKeyExprs(col("sh"), b, kb): _*))
         .as(Seq("combo", "key")))
     val bk = graft.core.Caching.eager(keyed(bf))
     // no distinct before the broadcast (r18): left_semi build side —
@@ -1027,6 +1055,38 @@ object Dedup {
       .where(bit_count(xor) <= maxHamming)
       .select(col("a.id").as("id"))
     vsStore.unionByName(vsBatch).distinct()
+  }
+
+  /** [[hammingProbeTouch]]'s geometry: `(blocks, keyBlocks)`, resolved
+    * by [[autoGeometry]] when both are 0, with its combination count,
+    * after the exhaustiveness and [[ComboCap]] checks. */
+  private def touchGeometry(blocks: Int, maxHamming: Int,
+                            keyBlocks: Int): (Int, Int, Long) = {
+    if (blocks == 0 || keyBlocks == 0) {
+      require(blocks == 0 && keyBlocks == 0,
+        s"auto-sizing takes BOTH blocks=0 and keyBlocks=0 (got " +
+          s"blocks=$blocks keyBlocks=$keyBlocks) — the two are sized " +
+          "jointly; override both or neither")
+      val (b, k) = autoGeometry(maxHamming)
+      return touchGeometry(b, maxHamming, k)
+    }
+    require(blocks >= 1 && blocks <= 64, s"blocks out of range: $blocks")
+    require(maxHamming >= 0 && maxHamming < blocks,
+      s"exhaustive only for hamming < blocks: blocks=$blocks maxHamming=$maxHamming")
+    require(keyBlocks >= 1 && keyBlocks <= blocks - maxHamming,
+      s"pigeonhole needs keyBlocks <= blocks - maxHamming: " +
+        s"blocks=$blocks maxHamming=$maxHamming keyBlocks=$keyBlocks")
+    // loud guard on EXPLICIT geometry, [[hammingCandidatesFromFp]]'s
+    // [[ComboCap]] applied to the probe too — and the overflow-safe
+    // Long count is what bkRows multiplies in the probe, so a
+    // pathological geometry (e.g. blocks=40, keyBlocks=20 ≈ 1.4e11
+    // combinations) fails HERE instead of hanging the driver
+    // enumerating combinations or overflowing `.size`'s Int
+    val nCombos = binomAtMost(blocks, keyBlocks, ComboCap)
+    require(nCombos <= ComboCap,
+      s"C($blocks, $keyBlocks) = ${if (nCombos > ComboCap) s">$ComboCap" else nCombos} " +
+        s"combination keys; pick a narrower geometry (cap $ComboCap)")
+    (blocks, keyBlocks, nCombos)
   }
 
   /** Nearly-equal contiguous bit-block layout over a 64-bit

@@ -686,6 +686,40 @@ class LlmSpec extends AnyFunSuite {
       "fixture should also contain untouched batch ids")
   }
 
+  test("hammingProbeTouchCached over a caller-cached frame equals the self-caching probe") {
+    // the admission arrival frame hands the probe a null-filtered
+    // projection of its own cache plus the frame's row count, an
+    // upper bound on the fingerprint rows
+    val fps = docs
+      .select($"doc_id".as("id"), graft.functions.SimHash64.simhash64(
+        graft.llm.TextStats.tokens($"text")).as("sh"))
+    val store = fps.where($"id" % 2 === 0)
+    // every third batch doc has no fingerprint (undecodable media)
+    val batch = fps.where($"id" % 2 === 1)
+      .withColumn("sh", when($"id" % 3 === 0, lit(null)).otherwise($"sh"))
+    val allNull = batch.withColumn("sh", lit(null).cast("long"))
+    for (bruteBelow <- Seq(2048L, 0L)) {
+      graft.core.Caching.scoped {
+        val want = Dedup.hammingProbeTouch(store,
+            batch.where($"sh".isNotNull), bruteBelow = bruteBelow)
+          .as[Long].collect().toSet
+        assert(want.nonEmpty, "fixture should contain touched batch ids")
+        val (cached, n) = graft.core.Caching.eagerCounted(batch)
+        val got = Dedup.hammingProbeTouchCached(store,
+            cached.where($"sh".isNotNull), n, bruteBelow = bruteBelow)
+          .as[Long].collect().toSet
+        assert(got == want, s"bruteBelow=$bruteBelow: " +
+          s"missed=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
+        // count > 0 but zero fingerprint rows: no ids on either path
+        val (nulls, nNull) = graft.core.Caching.eagerCounted(allNull)
+        assert(nNull > 0)
+        assert(Dedup.hammingProbeTouchCached(store,
+            nulls.where($"sh".isNotNull), nNull, bruteBelow = bruteBelow)
+          .count() == 0, s"bruteBelow=$bruteBelow: all-null batch touched")
+      }
+    }
+  }
+
   test("simhashCandidates rejects unsound parameters (bands <= maxHamming)") {
     intercept[IllegalArgumentException] {
       Dedup.simhashCandidates(docs, "doc_id", "text", bands = 8, maxHamming = 16)
