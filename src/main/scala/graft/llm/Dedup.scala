@@ -535,8 +535,6 @@ object Dedup {
   def simhashCandidatesFromFp(fp: DataFrame, bands: Int = 8,
                               maxHamming: Int = 7): DataFrame = {
     require(bands > 0 && 64 % bands == 0, s"bands must divide 64, got $bands")
-    require(maxHamming < bands,
-      s"banding is only exhaustive for hamming < bands: bands=$bands maxHamming=$maxHamming")
     hammingCandidatesFromFp(fp, bands, maxHamming, keyBlocks = 1)
   }
 
@@ -545,8 +543,9 @@ object Dedup {
     * productized (SCALE.md): pick the FEWEST combination keys
     * C(blocks, keyBlocks) that (a) stay EXHAUSTIVE by pigeonhole
     * (`keyBlocks <= blocks - maxHamming`) and (b) keep the effective
-    * key width `keyBlocks * floor(64/blocks)` at or above
-    * `keyBitsFloor` bits. The floor is the saturation guard: an
+    * key width `keyBlocks * floor(bits/blocks)` at or above
+    * `keyBitsFloor` bits, where `bits = 64 * words` is the
+    * fingerprint width. The floor is the saturation guard: an
     * 8-bit key space (blocks=8/keyBlocks=1 at h≤7) has only 256
     * buckets per combination, so bucket occupancy — and the candidate
     * join's output — grows linearly in corpus size and pair
@@ -576,22 +575,34 @@ object Dedup {
     * the real diagnosis instead of a misleading "pick a narrower
     * geometry" downstream. Examples: h=3 → (4, 1), 4 keys of 16
     * bits — the measured 19× pair-gen win over 9/2 (SCALE.md r14);
-    * h=7 → (9, 2) — 8/1's 8-bit keys fail the floor. */
-  def autoGeometry(maxHamming: Int, keyBitsFloor: Int = 14): (Int, Int) = {
-    require(maxHamming >= 0 && maxHamming < 64,
+    * h=7 → (9, 2) — 8/1's 8-bit keys fail the floor.
+    *
+    * Width-dependent, and only these: the default floor
+    * (`keyBitsFloor = 0` → [[KeyBitsFloor]]) and the one-Long key
+    * bound (the `keyBlocks` widest blocks fit 64 bits — keys join as
+    * BIGINT; always true for one word). Two words escape the one-word
+    * key ceiling (~15-bit keys at h≤7 fill past ~10^6 docs, 548.8 s
+    * at 5M, SCALE.md r16): h=7 → (9, 2), the same 36 keys at ≥28
+    * bits; h=8 → (10, 2), 45 keys of ≥24 bits. Fails loudly from h=16. */
+  def autoGeometry(maxHamming: Int, words: Int = 1,
+                   keyBitsFloor: Int = 0): (Int, Int) = {
+    checkWords(words)
+    val nBits = 64 * words
+    val floor = if (keyBitsFloor == 0) KeyBitsFloor(words) else keyBitsFloor
+    require(maxHamming >= 0 && maxHamming < nBits,
       s"maxHamming out of range: $maxHamming")
-    require(keyBitsFloor >= 1 && keyBitsFloor <= 64,
+    require(floor >= 1 && floor <= 64,
       s"keyBitsFloor out of range: $keyBitsFloor")
     var best = (0, 0)
     var bestC = Long.MaxValue
     var bestBits = -1
     var blocks = maxHamming + 1
-    while (blocks <= 64) {
-      val width = 64 / blocks
+    while (blocks <= nBits) {
+      val width = nBits / blocks                  // narrowest block
       var kb = 1
       while (kb <= blocks - maxHamming) {
-        val bits = kb * width
-        if (bits >= keyBitsFloor) {
+        val bits = kb * width                     // narrowest key
+        if (bits >= floor && widestKeyBits(nBits, blocks, kb) <= 64) {
           val c = binomAtMost(blocks, kb, ComboCap)
           if (c <= ComboCap &&
               (c < bestC || (c == bestC && bits > bestBits))) {
@@ -603,10 +614,64 @@ object Dedup {
       blocks += 1
     }
     require(best._1 != 0,
-      s"no exhaustive geometry with >= $keyBitsFloor key bits exists " +
-        s"within the $ComboCap-combination cap for maxHamming=" +
-        s"$maxHamming; lower the floor or the threshold")
+      s"no exhaustive $nBits-bit geometry with >= $floor key bits and " +
+        s"one-Long keys exists within the $ComboCap-combination cap for " +
+        s"maxHamming=$maxHamming; lower the floor or the threshold")
     best
+  }
+
+  /** [[autoGeometry]]'s default key-bit floor by width in 64-bit
+    * words: 14 for one (the measured decades above), 24 for two (holds
+    * combos·n²/2^bits under ~10^7 pairs at 5M docs). No other width
+    * has a measured floor, so the banding accepts no other. */
+  private val KeyBitsFloor = Map(1 -> 14, 2 -> 24)
+
+  private def checkWords(words: Int): Unit =
+    require(KeyBitsFloor.contains(words),
+      s"Hamming banding takes fingerprints of 1 or 2 BIGINT words, got " +
+        s"$words (no key-bit floor is measured for that width)")
+
+  /** Bits in the `keyBlocks` widest blocks of an `nBits` layout
+    * ([[blockLayout]]: the first `nBits % blocks` blocks carry one
+    * extra bit) — the widest combination key. */
+  private def widestKeyBits(nBits: Int, blocks: Int, keyBlocks: Int): Int =
+    keyBlocks * (nBits / blocks) + math.min(keyBlocks, nBits % blocks)
+
+  /** The banding's ONE geometry resolver — pair generation, the
+    * membership probe and the streaming twin all call it: `(blocks,
+    * keyBlocks, combination count)` for a `words`-word fingerprint,
+    * auto-sized by [[autoGeometry]] when both are 0. An explicit
+    * geometry must be in range, exhaustive by pigeonhole, keep its
+    * keys in one Long, and stay within [[ComboCap]] on the
+    * overflow-safe count (blocks=40, keyBlocks=20 ≈ 1.4e11
+    * combinations fails here, not by hanging the driver). */
+  private[graft] def geometry(words: Int, blocks: Int, maxHamming: Int,
+                              keyBlocks: Int): (Int, Int, Long) = {
+    if (blocks == 0 || keyBlocks == 0) {
+      require(blocks == 0 && keyBlocks == 0,
+        s"auto-sizing takes BOTH blocks=0 and keyBlocks=0 (got " +
+          s"blocks=$blocks keyBlocks=$keyBlocks) — the two are sized " +
+          "jointly; override both or neither")
+      val (b, k) = autoGeometry(maxHamming, words)
+      return geometry(words, b, maxHamming, k)
+    }
+    checkWords(words)
+    val nBits = 64 * words
+    require(blocks >= 1 && blocks <= nBits, s"blocks out of range: $blocks")
+    require(maxHamming >= 0 && maxHamming < blocks,
+      s"exhaustive only for hamming < blocks: blocks=$blocks maxHamming=$maxHamming")
+    require(keyBlocks >= 1 && keyBlocks <= blocks - maxHamming,
+      s"pigeonhole needs keyBlocks <= blocks - maxHamming: " +
+        s"blocks=$blocks maxHamming=$maxHamming keyBlocks=$keyBlocks")
+    val keyBits = widestKeyBits(nBits, blocks, keyBlocks)
+    require(keyBits <= 64,
+      s"combination keys must fit one Long: the $keyBlocks widest of " +
+        s"$blocks blocks hold $keyBits > 64 bits — use more blocks")
+    val nCombos = binomAtMost(blocks, keyBlocks, ComboCap)
+    require(nCombos <= ComboCap,
+      s"C($blocks, $keyBlocks) = ${if (nCombos > ComboCap) s">$ComboCap" else nCombos} " +
+        s"combination keys; pick a narrower geometry (cap $ComboCap)")
+    (blocks, keyBlocks, nCombos)
   }
 
   /** Exploded-keyed-row count at or under which the banding pair-gen
@@ -647,8 +712,8 @@ object Dedup {
   val ProbeBroadcastKeyedRows = 250000L
 
   /** Driver-side combination-key expansion cap shared by
-    * [[autoGeometry]] (search bound) and [[hammingCandidatesFromFp]]
-    * (loud guard on explicit geometry): C(40, 20) passes every
+    * [[autoGeometry]] (search bound) and [[geometry]] (loud guard on
+    * explicit geometry): C(40, 20) passes every
     * exhaustiveness bound yet would build ~10^11 probe-key
     * expressions on the driver; any sane geometry stays far below. */
   val ComboCap = 4096L
@@ -661,12 +726,12 @@ object Dedup {
     * BroadcastHashJoin falls back to interpreted eval), so that chain
     * ran interpreted PER JOINED ROW and dominated pair-gen wall time
     * (measured 6.2× on the 128-bit dense image fixture at sf0.1:
-    * 9.0 s → 1.45 s, identical output — ProbeWideTime r17). Here each
+    * 9.0 s → 1.45 s, identical output — OPTIMIZATION_r17.md §1). Here each
     * BLOCK is tested once (`cleanPred`, `blocks` tests instead of
     * C(blocks, keyBlocks) combination tests), folded into a bitmask,
     * and the first-all-clean-combination index comes from a 2^blocks
-    * lookup table (blocks ≤ 16 — every autoGeometry result for
-    * maxHamming ≤ 14 qualifies) or, for wider explicit geometries, a
+    * lookup table (blocks ≤ 16 — every one-word autoGeometry result
+    * and the two-word ones to h=13 qualify) or, for wider explicit geometries, a
     * per-combination when-chain over the PRECOMPUTED bitmask (one
     * integer AND per arm instead of one or two 64-bit mask xor-tests).
     * Returns −1 when no combination is clean, exactly like the chain
@@ -725,23 +790,21 @@ object Dedup {
     * entirely clean and the pair collides there. keyBlocks = 1 is
     * exactly the classic scheme.
     *
-    * Sizing: pick the FEWEST combinations whose key width clears the
-    * [[autoGeometry]] floor — e.g. blocks=9, maxHamming=7 forces
-    * keyBlocks ≤ 2; 36 combinations of ~15-bit keys hold bucket sizes
-    * flat through every measured decade (50k–5M, SCALE.md r16) where
-    * the single-block form saturated at 2^8 buckets by n ≈ 10^5.
-    * Wider-than-floor keys do NOT help at larger n: every extra
-    * combination re-emits every true pair into the canonical filter
-    * (measured 47× worse at the smallest decade — autoGeometry's
-    * scaladoc). Size the
-    * combination count to the threshold you ACTUALLY run, not the
-    * loosest one you might: at maxHamming=3, blocks=4/keyBlocks=1 is
-    * still exhaustive with 4 probe keys instead of 36, and the
-    * round-14 5M measurement (ProbeQ101Mit, SCALE.md) shows pair
-    * generation dropping 19× with bit-identical output. Pass
-    * `blocks = 0, keyBlocks = 0` to let the operator size itself from
-    * `maxHamming` via [[autoGeometry]] — the measured dispatch rule,
-    * the recommended default.
+    * Fingerprint width: `fp` is `id` plus one or two BIGINT word
+    * columns, the non-`id` columns in order — `(id, sh)` is a 64-bit
+    * fingerprint, `(id, lo, hi)` a 128-bit one whose `lo` holds bits
+    * 0–63. The distance is the popcount over every word's xor, blocks
+    * may straddle a word boundary ([[comboKeyExprs]] stitches those),
+    * and `hamming` in the output is that total; only the geometry's
+    * floor and one-Long key bound depend on the width.
+    *
+    * Sizing: pass `blocks = 0, keyBlocks = 0` (the recommended
+    * default) to size the geometry from `maxHamming` via
+    * [[autoGeometry]] — the measured dispatch rule: the FEWEST
+    * combinations whose key width clears the floor, sized to the
+    * threshold you ACTUALLY run (both wider keys and a looser
+    * threshold's geometry cost measured pair-gen time; see there).
+    * Every geometry goes through the shared [[geometry]] checks.
     *
     * `maxBucketSize` (0 = OFF, the default — exhaustiveness by
     * pigeonhole is this operator's contract): pair volume is quadratic
@@ -760,33 +823,10 @@ object Dedup {
   def hammingCandidatesFromFp(fp: DataFrame, blocks: Int,
                               maxHamming: Int, keyBlocks: Int,
                               maxBucketSize: Int = 0): DataFrame = {
-    if (blocks == 0 || keyBlocks == 0) {
-      require(blocks == 0 && keyBlocks == 0,
-        s"auto-sizing takes BOTH blocks=0 and keyBlocks=0 (got " +
-          s"blocks=$blocks keyBlocks=$keyBlocks) — the two are sized " +
-          "jointly; override both or neither")
-      val (b, k) = autoGeometry(maxHamming)
-      return hammingCandidatesFromFp(fp, b, maxHamming, k, maxBucketSize)
-    }
-    require(blocks >= 1 && blocks <= 64, s"blocks out of range: $blocks")
-    require(maxHamming >= 0 && maxHamming < blocks,
-      s"exhaustive only for hamming < blocks: blocks=$blocks maxHamming=$maxHamming")
-    require(keyBlocks >= 1 && keyBlocks <= blocks - maxHamming,
-      s"pigeonhole needs keyBlocks <= blocks - maxHamming: " +
-        s"blocks=$blocks maxHamming=$maxHamming keyBlocks=$keyBlocks")
-    // loud guard on EXPLICIT geometry ([[ComboCap]]'s scaladoc); the
-    // auto path above can't reach it — autoGeometry searches only
-    // within the same cap
-    locally {
-      val c = binomAtMost(blocks, keyBlocks, ComboCap)
-      require(c <= ComboCap,
-        s"C($blocks, $keyBlocks) = ${if (c > ComboCap) s">$ComboCap" else c} " +
-          s"combination keys; pick a narrower geometry (cap $ComboCap)")
-    }
-    val combos = (0 until blocks).combinations(keyBlocks).toSeq
-    val comboKeys = comboKeyExprs(col("sh"), blocks, keyBlocks)
-    val keyed = fp.select(col("id"), col("sh"),
-      posexplode(array(comboKeys: _*)).as(Seq("combo", "key")))
+    val words = fp.columns.toSeq.filterNot(_ == "id")
+    val (b, kb, _) = geometry(words.size, blocks, maxHamming, keyBlocks)
+    val combos = (0 until b).combinations(kb).toSeq
+    val keyed = keyedRows(fp, words, b, kb)
     // CANONICAL-COMBO dedup instead of a distinct(): a near-identical
     // pair collides in MANY combinations (up to all of them), so the
     // join emits up to C(blocks, keyBlocks) copies per pair — a
@@ -795,16 +835,36 @@ object Dedup {
     // (a per-row bitwise when-chain over precomputed block masks,
     // evaluated map-side on the join output), so every pair survives
     // exactly once and no dedup exchange exists at all.
-    val (widths, offsets) = blockLayout(blocks)
-    def widthMask(w: Int): Long = if (w == 64) -1L else (1L << w) - 1
-    val xor = col("a.sh").bitwiseXOR(col("b.sh"))
+    val (widths, offsets) = blockLayout(b, words.size)
+    val xors = words.map(w => col(s"a.$w").bitwiseXOR(col(s"b.$w")))
+    val ham = xors.map(bit_count).reduce(_ + _)
+    // bits [start, end) of one 64-bit word as a mask; empty → 0
+    def rangeMask(start: Int, end: Int): Long =
+      if (start >= end) 0L
+      else if (end - start == 64) -1L
+      else ((1L << (end - start)) - 1) << start
     // per-BLOCK cleanliness → canonical index via [[canonicalCombo]]
     // (the r17 lookup-table rewrite of the per-pair combination-mask
-    // CASE chain — see there for the measurement)
-    val blockClean = (0 until blocks).map { b =>
-      xor.bitwiseAND(lit(widthMask(widths(b)) << offsets(b))) === 0L
+    // CASE chain — see there for the measurement). Block bits
+    // [o, o+w) land in word i as [o, o+w) ∩ [64i, 64i+64); a word the
+    // block does not touch contributes no test.
+    val blockClean = (0 until b).map { blk =>
+      val (o, w) = (offsets(blk), widths(blk))
+      xors.zipWithIndex.flatMap { case (x, i) =>
+        val m = rangeMask(math.max(o, 64 * i) - 64 * i,
+          math.min(o + w, 64 * i + 64) - 64 * i)
+        if (m == 0L) None else Some(x.bitwiseAND(lit(m)) === 0L)
+      }.reduce(_ && _)
     }
     val canonical = canonicalCombo(blockClean, combos)
+    // candidate (a, b) rows → the pairs within maxHamming, each once:
+    // hamming test FIRST, the cheap conjunct (popcounts vs the
+    // canonical bitmask fold) — interpreted And short-circuits
+    // left-to-right
+    def verified(cands: DataFrame, combo: Column): DataFrame =
+      cands.where(ham <= maxHamming && combo === canonical)
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+          ham.as("hamming"))
     if (maxBucketSize <= 0) {
       // SIZE-DISPATCHED join strategy — never the planner's estimate:
       // the keyed frame is C(blocks, keyBlocks)·n rows, but Generate
@@ -827,16 +887,17 @@ object Dedup {
       val nDocs = fp.count()
       val keyedRows = nDocs * combos.size
       // LOUD REGIME SENTINEL, not a behavior change: past ~10^6 docs
-      // the h≤7 key space genuinely fills (random bucket collisions
-      // grow n²/2^keyBits per combination while true pairs grow n —
-      // measured 9.14 s at 500k vs 548.8 s at 5M on the dense image
-      // fixture, SCALE.md r16), and the measured mitigations are
+      // the one-word h≤7 key space genuinely fills (random bucket
+      // collisions grow n²/2^keyBits per combination while true pairs
+      // grow n — measured 9.14 s at 500k vs 548.8 s at 5M on the dense
+      // image fixture, SCALE.md r16), and the measured mitigations are
       // semantic choices only the caller can make: tighten maxHamming
       // (h≤3 is linear through 5M), or set maxBucketSize > 0 for the
       // capped path with its sentinel rows. Wider keys are measured
       // NOT to be a mitigation (every extra combination re-emits every
       // true pair — autoGeometry's scaladoc). The expected-collision
-      // estimate uses the narrowest combination key, conservatively.
+      // estimate uses the narrowest combination key, conservatively;
+      // at sane two-word geometries it is far out of reach.
       locally {
         val minKeyBits = combos.map(_.map(widths).sum).min
         val expectedRandomPairs =
@@ -855,22 +916,16 @@ object Dedup {
         if (keyedRows <= BroadcastKeyedRows)
           (broadcast(keyed.as("a")), keyed.as("b"))
         else (keyed.as("a").hint("merge"), keyed.as("b"))
-      left.join(right,
+      verified(left.join(right,
           col("a.combo") === col("b.combo") &&
           col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-        // hamming test FIRST: it is the cheap conjunct (two popcounts
-        // vs the canonical bitmask fold) and in interpreted eval the
-        // And short-circuits left-to-right
-        .where(bit_count(xor) <= maxHamming &&
-          col("a.combo") === canonical)
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("hamming"))
+          col("a.id") < col("b.id")), col("a.combo"))
     } else {
       // capped path: buckets accumulate through the bounded top-k
       // aggregate ([[graft.functions.BoundedMinK]] — a size-cap
-      // max-heap per (combo, key) buffer, hash-agg shape, map-side
-      // partial merge), so BOTH the aggregation state and the shuffle
+      // max-heap per (combo, key) buffer carrying every word,
+      // hash-agg shape, map-side partial merge), so BOTH the
+      // aggregation state and the shuffle
       // are O(cap) per bucket regardless of family width — where a
       // collect-then-slice form materialized the ENTIRE over-cap
       // bucket in one unspillable agg buffer (a width-10^7 family =
@@ -883,32 +938,30 @@ object Dedup {
       val grouped = keyed
         .groupBy(col("combo"), col("key"))
         .agg(graft.functions.BoundedMinK.collect_min_k(
-          col("id"), col("sh"), maxBucketSize).as("mk"))
+          col("id"), words, maxBucketSize).as("mk"))
         .select(col("combo"), col("key"),
           col("mk.ms").as("ms"), col("mk.n").as("n"))
       val sentinels = grouped.where(col("n") > maxBucketSize)
         .select(lit(-1L).as("id_a"), col("key").cast("long").as("id_b"),
           lit(-1).as("hamming"))
-      val pairs = grouped
+      verified(grouped
         .select(col("combo"), col("ms"))
         .where(size(col("ms")) >= 2)
         .select(col("combo"), col("ms"), posexplode(col("ms")).as(Seq("i", "a")))
         .select(col("combo"), col("a"),
           explode(slice(col("ms"), col("i") + lit(2),
-            lit(maxBucketSize))).as("b"))
-        .where(bit_count(xor) <= maxHamming && col("combo") === canonical)
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("hamming"))
-      pairs.unionByName(sentinels)
+            lit(maxBucketSize))).as("b")), col("combo"))
+        .unionByName(sentinels)
     }
   }
 
   /** MEMBERSHIP probe for the admission service's media stores: the
     * batch ids having ANY Hamming-≤`maxHamming` partner in `storeFp`
     * or among SMALLER-ID rows of `batchFp` (q98's conservative
-    * monotone rule, per modality). Both inputs are `(id, sh)` with
-    * non-null sh (non-decodable media never flags — drop nulls before
-    * calling).
+    * monotone rule, per modality). Both inputs are one-word `(id, sh)`
+    * fingerprints with non-null sh (non-decodable media never flags —
+    * drop nulls before calling); the geometry comes from the shared
+    * [[geometry]] resolver.
     *
     * Scale shape, the q95 probe discipline: the batch side is keyed
     * once and cached (batch-sized); the STORE is scanned exactly once
@@ -953,17 +1006,15 @@ object Dedup {
     * fingerprints in a cache calls [[hammingProbeTouchCached]]
     * instead, which adds no cache on the brute path.
     *
-    * Geometry defaults to [[autoGeometry]] (`blocks = keyBlocks = 0`)
-    * — (9, 2) at the default maxHamming=7, unchanged from the
-    * pre-auto behavior; a caller tightening the threshold now gets a
-    * matched geometry without reading the sizing scaladoc. */
+    * Geometry: [[geometry]], auto-sized at `blocks = keyBlocks = 0`
+    * — (9, 2) at the default maxHamming=7. */
   def hammingProbeTouch(storeFp: DataFrame, batchFp: DataFrame,
                         blocks: Int = 0, maxHamming: Int = 7,
                         keyBlocks: Int = 0,
                         bruteBelow: Long = 2048): DataFrame = {
     // geometry is checked before the batch is cached, so a bad
     // argument leaves no cache behind
-    touchGeometry(blocks, maxHamming, keyBlocks)
+    geometry(1, blocks, maxHamming, keyBlocks)
     val (bf, nBatch) = graft.core.Caching.eagerCounted(
       batchFp.select(col("id"), col("sh")))
     hammingProbeTouchCached(storeFp, bf, nBatch, blocks, maxHamming,
@@ -987,7 +1038,7 @@ object Dedup {
   private[graft] def hammingProbeTouchCached(storeFp: DataFrame,
       bf: DataFrame, nBatch: Long, blocks: Int = 0, maxHamming: Int = 7,
       keyBlocks: Int = 0, bruteBelow: Long = 2048): DataFrame = {
-    val (b, kb, nCombos) = touchGeometry(blocks, maxHamming, keyBlocks)
+    val (b, kb, nCombos) = geometry(1, blocks, maxHamming, keyBlocks)
     if (nBatch == 0L)
       return bf.select(col("id")).limit(0)
     if (nBatch <= bruteBelow) {
@@ -1013,9 +1064,7 @@ object Dedup {
         .select(col("id"))
       return vsStore.unionByName(vsBatch).distinct()
     }
-    def keyed(fp: DataFrame): DataFrame = fp.select(col("id"), col("sh"),
-      posexplode(array(comboKeyExprs(col("sh"), b, kb): _*))
-        .as(Seq("combo", "key")))
+    def keyed(fp: DataFrame): DataFrame = keyedRows(fp, Seq("sh"), b, kb)
     val bk = graft.core.Caching.eager(keyed(bf))
     // no distinct before the broadcast (r18): left_semi build side —
     // duplicate (combo, key) rows only pad the hash relation, and the
@@ -1057,294 +1106,56 @@ object Dedup {
     vsStore.unionByName(vsBatch).distinct()
   }
 
-  /** [[hammingProbeTouch]]'s geometry: `(blocks, keyBlocks)`, resolved
-    * by [[autoGeometry]] when both are 0, with its combination count,
-    * after the exhaustiveness and [[ComboCap]] checks. */
-  private def touchGeometry(blocks: Int, maxHamming: Int,
-                            keyBlocks: Int): (Int, Int, Long) = {
-    if (blocks == 0 || keyBlocks == 0) {
-      require(blocks == 0 && keyBlocks == 0,
-        s"auto-sizing takes BOTH blocks=0 and keyBlocks=0 (got " +
-          s"blocks=$blocks keyBlocks=$keyBlocks) — the two are sized " +
-          "jointly; override both or neither")
-      val (b, k) = autoGeometry(maxHamming)
-      return touchGeometry(b, maxHamming, k)
-    }
-    require(blocks >= 1 && blocks <= 64, s"blocks out of range: $blocks")
-    require(maxHamming >= 0 && maxHamming < blocks,
-      s"exhaustive only for hamming < blocks: blocks=$blocks maxHamming=$maxHamming")
-    require(keyBlocks >= 1 && keyBlocks <= blocks - maxHamming,
-      s"pigeonhole needs keyBlocks <= blocks - maxHamming: " +
-        s"blocks=$blocks maxHamming=$maxHamming keyBlocks=$keyBlocks")
-    // loud guard on EXPLICIT geometry, [[hammingCandidatesFromFp]]'s
-    // [[ComboCap]] applied to the probe too — and the overflow-safe
-    // Long count is what bkRows multiplies in the probe, so a
-    // pathological geometry (e.g. blocks=40, keyBlocks=20 ≈ 1.4e11
-    // combinations) fails HERE instead of hanging the driver
-    // enumerating combinations or overflowing `.size`'s Int
-    val nCombos = binomAtMost(blocks, keyBlocks, ComboCap)
-    require(nCombos <= ComboCap,
-      s"C($blocks, $keyBlocks) = ${if (nCombos > ComboCap) s">$ComboCap" else nCombos} " +
-        s"combination keys; pick a narrower geometry (cap $ComboCap)")
-    (blocks, keyBlocks, nCombos)
-  }
-
-  /** Nearly-equal contiguous bit-block layout over a 64-bit
-    * fingerprint: (widths, bit offsets); the first 64 % blocks blocks
-    * carry the extra bit. Shared by the batch combo join and the
-    * streaming twin so their bucket keys are bit-identical. */
-  private[graft] def blockLayout(blocks: Int): (Array[Int], Array[Int]) = {
-    val base = 64 / blocks
-    val widths = Array.tabulate(blocks)(i => if (i < 64 % blocks) base + 1 else base)
+  /** Nearly-equal contiguous bit-block layout over a fingerprint of
+    * `words` 64-bit words (word i holds bits 64i … 64i+63): (widths,
+    * bit offsets); the first `64·words % blocks` blocks carry the extra
+    * bit. Shared by the batch combo join, the probe and the streaming
+    * twin so their bucket keys are bit-identical. */
+  private[graft] def blockLayout(blocks: Int,
+                                 words: Int = 1): (Array[Int], Array[Int]) = {
+    checkWords(words)
+    val nBits = 64 * words
+    val base = nBits / blocks
+    val widths = Array.tabulate(blocks)(i => if (i < nBits % blocks) base + 1 else base)
     (widths, widths.scanLeft(0)(_ + _))
   }
 
+  /** `(id, words…, combo, key)`: one row per fingerprint per
+    * combination key ([[comboKeyExprs]]). */
+  private def keyedRows(fp: DataFrame, words: Seq[String], blocks: Int,
+                        keyBlocks: Int): DataFrame = {
+    val wordCols = words.map(col)
+    fp.select((col("id") +: wordCols) :+
+      posexplode(array(comboKeyExprs(wordCols, blocks, keyBlocks): _*))
+        .as(Seq("combo", "key")): _*)
+  }
+
   /** The C(blocks, keyBlocks) combination-key expressions over a
-    * 64-bit fingerprint column (see [[hammingCandidatesFromFp]]),
-    * in combination-enumeration order. */
-  private[graft] def comboKeyExprs(sh: Column, blocks: Int,
+    * fingerprint given as its BIGINT word columns (see
+    * [[hammingCandidatesFromFp]]), in combination-enumeration order.
+    * The geometry must come from [[geometry]], so every key fits one
+    * Long. */
+  private[graft] def comboKeyExprs(words: Seq[Column], blocks: Int,
                                    keyBlocks: Int): Seq[Column] = {
-    val (widths, offsets) = blockLayout(blocks)
+    val (widths, offsets) = blockLayout(blocks, words.size)
     // (1L << 64) wraps to 1 (Java shifts mod 64), so the full-width
     // single-block case needs its mask spelled as -1L
     def widthMask(w: Int): Long = if (w == 64) -1L else (1L << w) - 1
-    def blockBits(b: Int): Column =
-      shiftrightunsigned(sh, offsets(b))
-        .bitwiseAND(lit(widthMask(widths(b))))
-    (0 until blocks).combinations(keyBlocks).map { combo =>
-      combo.foldLeft(lit(0L)) { (acc, b) =>
-        shiftleft(acc, widths(b)).bitwiseOR(blockBits(b))
-      }
-    }.toSeq
-  }
-
-  // ================== WIDE (128-bit) Hamming banding ==================
-  //
-  // Round-17 escape from the 64-bit key-space ceiling: a 64-bit
-  // fingerprint caps combination keys at ~15 bits for the h≤7
-  // geometry, and past ~10^6 docs random bucket collisions
-  // (combos·n²/2^keyBits) genuinely fill that space — measured 9.14 s
-  // at 500k vs 548.8 s at 5M on the dense image fixture (SCALE.md
-  // r16), with wider KEY COUNTS measured 47× WORSE (every extra
-  // combination re-emits every true pair). The un-refuted direction
-  // is key WIDTH: a 128-bit fingerprint doubles every block, so the
-  // same C(9,2)=36 combination keys carry ~28 bits instead of ~15 —
-  // key space ×~8000, collision term at 5M docs ≈ 3×10^6 instead of
-  // 5×10^12. The similarity contract changes with the fingerprint
-  // (Hamming over 128 bits), so the operating thresholds are
-  // MEASURED, not assumed: ProbeWide (r17) brute-forced the fixture
-  // twin distributions first — image dHash‖aHash true pairs (64-bit
-  // h≤7 truth) all sit at h128 ≤ 8 with the closest non-pair at 27;
-  // the doubled-grid audio fingerprint's same-family pairs all sit at
-  // h ≤ 7 with the closest cross-family pair at 31.
-
-  /** [[autoGeometry]] for a 128-bit fingerprint: fewest combination
-    * keys subject to the same pigeonhole bound, a HIGHER key-width
-    * floor (default 24 bits — 128-bit blocks make wide keys free, and
-    * 24 bits holds the expected-collision term combos·n²/2^bits under
-    * ~10^7 pairs at 5M docs where the 64-bit path's 15-bit ceiling is
-    * measured quadratic), the [[ComboCap]] driver-expansion cap, and
-    * one new constraint the 64-bit search never needed: the
-    * concatenated combination key must FIT ONE LONG (keyBlocks ×
-    * widest block ≤ 64 bits), since keys join as BIGINT columns.
-    * Examples: h=7 → (9, 2), 36 keys of ≥28 bits (the 64-bit
-    * geometry's combo count with ×8000 the key space); h=8 →
-    * (10, 2), 45 keys of ≥24 bits; h=3 → (4, 1), 4 keys of 32. */
-  def autoGeometry128(maxHamming: Int, keyBitsFloor: Int = 24): (Int, Int) = {
-    require(maxHamming >= 0 && maxHamming < 128,
-      s"maxHamming out of range: $maxHamming")
-    require(keyBitsFloor >= 1 && keyBitsFloor <= 64,
-      s"keyBitsFloor out of range: $keyBitsFloor")
-    var best = (0, 0)
-    var bestC = Long.MaxValue
-    var bestBits = -1
-    var blocks = math.max(2, maxHamming + 1)
-    while (blocks <= 128) {
-      val width = 128 / blocks                    // narrowest block
-      val maxWidth = if (128 % blocks == 0) width else width + 1
-      var kb = 1
-      while (kb <= blocks - maxHamming) {
-        val bits = kb * width                     // narrowest key
-        if (bits >= keyBitsFloor && kb * maxWidth <= 64) {
-          val c = binomAtMost(blocks, kb, ComboCap)
-          if (c <= ComboCap &&
-              (c < bestC || (c == bestC && bits > bestBits))) {
-            best = (blocks, kb); bestC = c; bestBits = bits
-          }
-        }
-        kb += 1
-      }
-      blocks += 1
-    }
-    require(best._1 != 0,
-      s"no exhaustive 128-bit geometry with >= $keyBitsFloor key bits " +
-        s"and one-Long keys exists within the $ComboCap-combination " +
-        s"cap for maxHamming=$maxHamming; lower the floor or the threshold")
-    best
-  }
-
-  /** Nearly-equal contiguous bit-block layout over a 128-bit
-    * fingerprint held as two Longs (`lo` = bits 0–63, `hi` = bits
-    * 64–127): (widths, bit offsets); the first 128 % blocks blocks
-    * carry the extra bit. Blocks may straddle the lo/hi boundary —
-    * [[comboKeyExprs128]] stitches those from both halves. */
-  private[graft] def blockLayout128(blocks: Int): (Array[Int], Array[Int]) = {
-    val base = 128 / blocks
-    val widths = Array.tabulate(blocks)(i =>
-      if (i < 128 % blocks) base + 1 else base)
-    (widths, widths.scanLeft(0)(_ + _))
-  }
-
-  /** The C(blocks, keyBlocks) combination-key expressions over a
-    * 128-bit (lo, hi) fingerprint pair, in combination-enumeration
-    * order; requires blocks >= 2 (so no block exceeds 64 bits) and
-    * keys that fit one Long ([[autoGeometry128]]'s constraint). */
-  private[graft] def comboKeyExprs128(lo: Column, hi: Column, blocks: Int,
-                                      keyBlocks: Int): Seq[Column] = {
-    val (widths, offsets) = blockLayout128(blocks)
-    def widthMask(w: Int): Long = if (w == 64) -1L else (1L << w) - 1
     def blockBits(b: Int): Column = {
-      val o = offsets(b); val w = widths(b)
+      val w = widths(b)
+      val (i, o) = (offsets(b) / 64, offsets(b) % 64)
       val m = lit(widthMask(w))
-      if (o >= 64) shiftrightunsigned(hi, o - 64).bitwiseAND(m)
-      else if (o + w <= 64) shiftrightunsigned(lo, o).bitwiseAND(m)
-      else // straddles the boundary; 0 < o < 64 here, so both shifts
-           // are in (0, 64) and Java's mod-64 shift wrap never bites
-        shiftrightunsigned(lo, o)
-          .bitwiseOR(shiftleft(hi, 64 - o)).bitwiseAND(m)
+      if (o + w <= 64) shiftrightunsigned(words(i), o).bitwiseAND(m)
+      else // straddles words i and i+1; 0 < o < 64 here, so both
+           // shifts are in (0, 64) and Java's mod-64 wrap never bites
+        shiftrightunsigned(words(i), o)
+          .bitwiseOR(shiftleft(words(i + 1), 64 - o)).bitwiseAND(m)
     }
     (0 until blocks).combinations(keyBlocks).map { combo =>
       combo.foldLeft(lit(0L)) { (acc, b) =>
         shiftleft(acc, widths(b)).bitwiseOR(blockBits(b))
       }
     }.toSeq
-  }
-
-  /** [[hammingCandidatesFromFp]] over a 128-bit fingerprint: `fp` is
-    * `(id, lo, hi)` with the fingerprint's low/high 64 bits in two
-    * BIGINT columns, and every pair at TOTAL Hamming distance
-    * (popcount of both halves' xors) <= `maxHamming` is emitted
-    * exactly once — same pigeonhole exhaustiveness, same
-    * canonical-combo dedup (per-combo masks now span both halves),
-    * same TRUE-exploded-size join dispatch, same capped path
-    * ([[graft.functions.BoundedMinK.collect_min_k2]] carries both
-    * halves through the size-capped heap), same loud sentinels.
-    * Geometry defaults to [[autoGeometry128]] (`blocks = keyBlocks =
-    * 0`). The point of the width: the quadratic-regime sentinel
-    * threshold that the 64-bit path crosses near 10^6 docs
-    * (combos·n²/2^15) is pushed out by a factor of ~2^13 at the
-    * default h≤7 geometry — ProbeWide's decade table (SCALE.md r17)
-    * measures the 5M-doc leg FLAT where the 64-bit path took
-    * 548.8 s. */
-  def hammingCandidatesFromFp128(fp: DataFrame, blocks: Int,
-                                 maxHamming: Int, keyBlocks: Int,
-                                 maxBucketSize: Int = 0): DataFrame = {
-    if (blocks == 0 || keyBlocks == 0) {
-      require(blocks == 0 && keyBlocks == 0,
-        s"auto-sizing takes BOTH blocks=0 and keyBlocks=0 (got " +
-          s"blocks=$blocks keyBlocks=$keyBlocks) — the two are sized " +
-          "jointly; override both or neither")
-      val (b, k) = autoGeometry128(maxHamming)
-      return hammingCandidatesFromFp128(fp, b, maxHamming, k, maxBucketSize)
-    }
-    require(blocks >= 2 && blocks <= 128, s"blocks out of range: $blocks")
-    require(maxHamming >= 0 && maxHamming < blocks,
-      s"exhaustive only for hamming < blocks: blocks=$blocks maxHamming=$maxHamming")
-    require(keyBlocks >= 1 && keyBlocks <= blocks - maxHamming,
-      s"pigeonhole needs keyBlocks <= blocks - maxHamming: " +
-        s"blocks=$blocks maxHamming=$maxHamming keyBlocks=$keyBlocks")
-    val (widths, offsets) = blockLayout128(blocks)
-    require(keyBlocks * widths.max <= 64,
-      s"combination keys must fit one Long: keyBlocks=$keyBlocks × " +
-        s"width=${widths.max} > 64 bits — use more blocks")
-    locally {
-      val c = binomAtMost(blocks, keyBlocks, ComboCap)
-      require(c <= ComboCap,
-        s"C($blocks, $keyBlocks) = ${if (c > ComboCap) s">$ComboCap" else c} " +
-          s"combination keys; pick a narrower geometry (cap $ComboCap)")
-    }
-    val combos = (0 until blocks).combinations(keyBlocks).toSeq
-    val comboKeys = comboKeyExprs128(col("lo"), col("hi"), blocks, keyBlocks)
-    val keyed = fp.select(col("id"), col("lo"), col("hi"),
-      posexplode(array(comboKeys: _*)).as(Seq("combo", "key")))
-    // canonical-combo per-pair dedup, masks split across the halves:
-    // bits [o, o+w) of the 128-bit fingerprint land in lo as
-    // [o, min(o+w, 64)) and in hi as [max(o, 64), o+w) − 64
-    def rangeMask(start: Int, end: Int): Long =
-      if (start >= end) 0L
-      else if (end - start == 64) -1L
-      else ((1L << (end - start)) - 1) << start
-    val xorLo = col("a.lo").bitwiseXOR(col("b.lo"))
-    val xorHi = col("a.hi").bitwiseXOR(col("b.hi"))
-    val ham = (bit_count(xorLo) + bit_count(xorHi)).cast("int")
-    // per-BLOCK cleanliness (each block's mask split across the two
-    // halves) → canonical index via [[canonicalCombo]] (the r17
-    // lookup-table rewrite — the nested combination-mask CASE chain it
-    // replaces ran interpreted per joined row and dominated this
-    // operator's wall time: 9.0 → 1.45 s at sf0.1, ProbeWideTime)
-    val blockClean = (0 until blocks).map { b =>
-      val ml = rangeMask(offsets(b), math.min(offsets(b) + widths(b), 64))
-      val mh = rangeMask(math.max(offsets(b), 64) - 64,
-        offsets(b) + widths(b) - 64)
-      xorLo.bitwiseAND(lit(ml)) === 0L && xorHi.bitwiseAND(lit(mh)) === 0L
-    }
-    val canonical = canonicalCombo(blockClean, combos)
-    if (maxBucketSize <= 0) {
-      // TRUE-exploded-size join dispatch + quadratic-regime sentinel,
-      // verbatim from the 64-bit path (the r16 Generate-estimate fix
-      // applies to any posexplode self-join); the sentinel threshold
-      // is far out of reach at sane 128-bit geometries — that is the
-      // wide path's reason to exist — but the guard stays in case a
-      // caller forces a narrow explicit geometry
-      val nDocs = fp.count()
-      val keyedRows = nDocs * combos.size
-      locally {
-        val minKeyBits = combos.map(_.map(widths).sum).min
-        val expectedRandomPairs =
-          combos.size.toDouble * nDocs.toDouble * nDocs.toDouble /
-            math.pow(2.0, minKeyBits.toDouble)
-        if (expectedRandomPairs > 5e9)
-          System.err.println(
-            f"[graft] hammingCandidatesFromFp128: $nDocs%,d docs × " +
-              f"${combos.size} combination keys of ≥$minKeyBits bits — " +
-              f"expected random bucket collisions ≈ $expectedRandomPairs%.1e " +
-              "pairs, PAST the decade measured flat (SCALE.md r16/r17). " +
-              "Tighten maxHamming or set maxBucketSize > 0; wider keys " +
-              "are measured not to help.")
-      }
-      val (left, right) =
-        if (keyedRows <= BroadcastKeyedRows)
-          (broadcast(keyed.as("a")), keyed.as("b"))
-        else (keyed.as("a").hint("merge"), keyed.as("b"))
-      left.join(right,
-          col("a.combo") === col("b.combo") &&
-          col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-        .where(ham <= maxHamming && col("a.combo") === canonical)
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          ham.as("hamming"))
-    } else {
-      val grouped = keyed
-        .groupBy(col("combo"), col("key"))
-        .agg(graft.functions.BoundedMinK.collect_min_k2(
-          col("id"), col("lo"), col("hi"), maxBucketSize).as("mk"))
-        .select(col("combo"), col("key"),
-          col("mk.ms").as("ms"), col("mk.n").as("n"))
-      val sentinels = grouped.where(col("n") > maxBucketSize)
-        .select(lit(-1L).as("id_a"), col("key").cast("long").as("id_b"),
-          lit(-1).as("hamming"))
-      val pairs = grouped
-        .select(col("combo"), col("ms"))
-        .where(size(col("ms")) >= 2)
-        .select(col("combo"), col("ms"), posexplode(col("ms")).as(Seq("i", "a")))
-        .select(col("combo"), col("a"),
-          explode(slice(col("ms"), col("i") + lit(2),
-            lit(maxBucketSize))).as("b"))
-        .where(ham <= maxHamming && col("combo") === canonical)
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          ham.as("hamming"))
-      pairs.unionByName(sentinels)
-    }
   }
 
   /** Embedding cosine near-dup in the exact integer domain: vectors

@@ -344,15 +344,9 @@ object Multimodal {
     * flat well past 10^6 images where the single-block 8-band form
     * saturates its 2^8 buckets by ~10^5 (measured: q80 at sf10 went
     * quadratic, 391 s) — and (4, 1) at h≤3, the measured 19× pair-gen
-    * win (SCALE.md r14/r15). Output: (id_a, id_b, hamming).
-    *
-    * SOURCE-COMPATIBLE BREAK vs the pre-r15 fixed defaults (blocks=9,
-    * keyBlocks=2): the two geometry parameters are sized JOINTLY, so
-    * overriding only one (e.g. `blocks = 11` while keeping the
-    * keyBlocks default, which used to yield (11, 2)) now fails loudly
-    * at runtime — pass both or neither. Applies identically to
-    * [[audioNearDupPairs]], the streaming twins, and
-    * [[Dedup.hammingProbeTouch]]. */
+    * win (SCALE.md r14/r15). The two geometry parameters are sized
+    * jointly ([[Dedup.geometry]], shared by every banding entry
+    * point): pass both or neither. Output: (id_a, id_b, hamming). */
   def imageNearDupPairs(media: DataFrame, idCol: String,
                         payloadCol: String, blocks: Int = 0,
                         maxHamming: Int = 7, keyBlocks: Int = 0,
@@ -367,13 +361,11 @@ object Multimodal {
 
   /** Image near-dup pairs over the WIDE (128-bit) fingerprint —
     * dHash ‖ aHash from ONE decode ([[graft.functions.PerceptualHash
-    * .d_a_hash]]) banded by [[Dedup.hammingCandidatesFromFp128]].
-    * This is the measured escape from [[imageNearDupPairs]]'s 64-bit
-    * key-space ceiling: the h≤7/64-bit geometry's ~15-bit keys
-    * genuinely fill by ~10^6 docs (548.8 s at 5M, SCALE.md r16)
-    * while the wide default geometry (10, 2) carries 45 keys of
-    * ≥24 bits — collision term ~2^13 smaller, decade table flat
-    * through 5M (SCALE.md r17).
+    * .d_a_hash]]) as the two words `(lo, hi)` of
+    * [[Dedup.hammingCandidatesFromFp]]: the escape from the 64-bit
+    * key-space ceiling ([[Dedup.autoGeometry]]) — the default (10, 2)
+    * carries 45 keys of ≥24 bits, a collision term ~2^13 smaller by
+    * arithmetic (no wide-path decade table was recorded).
     *
     * DIFFERENT SIMILARITY CONTRACT, measured before shipping
     * (ProbeWide r17): pairs at combined dHash+aHash Hamming <=
@@ -395,7 +387,7 @@ object Multimodal {
         graft.functions.PerceptualHash.d_a_hash(col(payloadCol)).as("h"))
       .where(col("h").isNotNull)
       .select(col("id"), col("h.dh").as("lo"), col("h.ah").as("hi")))
-    Dedup.hammingCandidatesFromFp128(fp, blocks, maxHamming, keyBlocks,
+    Dedup.hammingCandidatesFromFp(fp, blocks, maxHamming, keyBlocks,
       maxBucketSize)
   }
 
@@ -506,10 +498,7 @@ object Multimodal {
     * (non-PCM16 payloads drop out as NULL), then the SAME multi-block
     * Hamming banding, exhaustive for hamming <= maxHamming by
     * pigeonhole, one equi-join keyed on (combination, key bits), never
-    * all-pairs. Geometry defaults to [[Dedup.autoGeometry]] sizing,
-    * as in [[imageNearDupPairs]] — including its note on the
-    * source-compatible break: override both of blocks/keyBlocks or
-    * neither. */
+    * all-pairs. Geometry as in [[imageNearDupPairs]]. */
   def audioNearDupPairs(media: DataFrame, idCol: String,
                         payloadCol: String, blocks: Int = 0,
                         maxHamming: Int = 7, keyBlocks: Int = 0,
@@ -524,8 +513,8 @@ object Multimodal {
 
   /** Audio near-dup pairs over the WIDE (128-bit) fingerprint — the
     * DOUBLED 17×8 energy grid ([[graft.functions.AudioFingerprint
-    * .fpWide]], one pass) banded by
-    * [[Dedup.hammingCandidatesFromFp128]]: the audio leg of the
+    * .fpWide]], one pass) as the two words `(lo, hi)` of
+    * [[Dedup.hammingCandidatesFromFp]]: the audio leg of the
     * r17 wide-banding escape (see [[imageNearDupPairsWide]] for the
     * 64-bit ceiling it escapes). DIFFERENT SIMILARITY CONTRACT,
     * measured before shipping (ProbeWide r17, family-membership
@@ -553,7 +542,7 @@ object Multimodal {
           .as("h"))
       .where(col("h").isNotNull)
       .select(col("id"), col("h.lo").as("lo"), col("h.hi").as("hi")))
-    Dedup.hammingCandidatesFromFp128(fp, blocks, maxHamming, keyBlocks,
+    Dedup.hammingCandidatesFromFp(fp, blocks, maxHamming, keyBlocks,
       maxBucketSize)
   }
 

@@ -3639,8 +3639,8 @@ object LlmPipelines {
     * q80 geometry's ~15-bit keys genuinely saturate by ~10^6 images
     * (SCALE.md r16 measured 548.8 s at 5M) while this plan's default
     * (10, 2) geometry keys carry >= 24 bits — same banding join
-    * shape, collision term ~2^13 smaller, decade table flat through
-    * 5M (SCALE.md r17). Contract: combined Hamming <= 8 over 128
+    * shape, collision term ~2^13 smaller by arithmetic (no wide-path
+    * decade table was recorded). Contract: combined Hamming <= 8 over 128
     * bits, the measured operating point (ProbeWide r17: true 64-bit
     * pairs all <= 8, closest non-pair 27, JPEG re-encode twins at 0).
     * Both hashes come from ONE codegen'd decode

@@ -319,17 +319,13 @@ object EventStream {
                                       keyBlocks: Int, maxBucketSize: Int,
                                       watermark: String,
                                       idleTimeout: String): DataFrame = {
-    // blocks=0/keyBlocks=0 → the SAME auto-sizing as the batch twin
-    // (Dedup.autoGeometry), so stream==batch bucket keys hold at every
-    // threshold without the caller repeating the geometry.
-    if (blocks == 0 || keyBlocks == 0) {
-      require(blocks == 0 && keyBlocks == 0,
-        s"auto-sizing takes BOTH blocks=0 and keyBlocks=0 (got " +
-          s"blocks=$blocks keyBlocks=$keyBlocks)")
-      val (b, k) = graft.llm.Dedup.autoGeometry(maxHamming)
-      return streamingHammingNearDup(media, idCol, tsCol, fpExpr, b,
-        maxHamming, k, maxBucketSize, watermark, idleTimeout)
-    }
+    // the batch twin's resolver (Dedup.geometry): the same auto-sizing
+    // at blocks=0/keyBlocks=0, so stream==batch bucket keys hold at
+    // every threshold, and the same checks on an explicit geometry,
+    // so a non-exhaustive one throws here instead of silently
+    // missing pairs once the stream runs
+    val (nBlocks, kb, _) =
+      graft.llm.Dedup.geometry(1, blocks, maxHamming, keyBlocks)
     val spark = media.sparkSession
     import spark.implicits._
     // Per-combination clean masks, SAME enumeration order as
@@ -337,9 +333,9 @@ object EventStream {
     // masked XOR is zero. Tiny (C(blocks, keyBlocks) longs), rides the
     // closure to every executor.
     val comboMasks: Array[Long] = locally {
-      val (widths, offsets) = graft.llm.Dedup.blockLayout(blocks)
+      val (widths, offsets) = graft.llm.Dedup.blockLayout(nBlocks)
       def widthMask(w: Int): Long = if (w == 64) -1L else (1L << w) - 1
-      (0 until blocks).combinations(keyBlocks).map(
+      (0 until nBlocks).combinations(kb).map(
         _.map(b => widthMask(widths(b)) << offsets(b)).reduce(_ | _)).toArray
     }
     val fp = media.select(col(idCol).cast("long").as("id"),
@@ -347,7 +343,7 @@ object EventStream {
       .where(col("id").isNotNull && col("ts").isNotNull && col("sh").isNotNull)
     val banded = fp.select(col("id"), col("ts"), col("sh"),
         posexplode(array(
-          graft.llm.Dedup.comboKeyExprs(col("sh"), blocks, keyBlocks): _*))
+          graft.llm.Dedup.comboKeyExprs(Seq(col("sh")), nBlocks, kb): _*))
           .as(Seq("combo", "key")))
     banded
       .withWatermark("ts", watermark)

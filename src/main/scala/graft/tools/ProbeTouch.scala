@@ -46,7 +46,7 @@ object ProbeTouch {
       t("bare store scan") { store.write.mode("overwrite").format("noop").save() }
       t("36-combo key expansion only") {
         store.select(col("id"), posexplode(array(
-            graft.llm.Dedup.comboKeyExprs(col("sh"), 9, 2): _*))
+            graft.llm.Dedup.comboKeyExprs(Seq(col("sh")), 9, 2): _*))
             .as(Seq("combo", "key")))
           .write.mode("overwrite").format("noop").save()
       }

@@ -511,7 +511,9 @@ class LlmSpec extends AnyFunSuite {
     // saturation floor that excludes 8/1's 256-bucket key space at
     // h<=7 — the measured quadratic decade curve, SCALE.md r15)
     val expect = Map(0 -> (1, 1), 1 -> (2, 1), 2 -> (3, 1),
-      3 -> (4, 1), 4 -> (6, 2), 5 -> (7, 2), 6 -> (8, 2), 7 -> (9, 2))
+      3 -> (4, 1), 4 -> (6, 2), 5 -> (7, 2), 6 -> (8, 2), 7 -> (9, 2),
+      8 -> (11, 3), 9 -> (12, 3), 10 -> (14, 4), 11 -> (15, 4),
+      12 -> (16, 4))
     expect.foreach { case (h, g) =>
       assert(Dedup.autoGeometry(h) == g,
         s"h=$h: got ${Dedup.autoGeometry(h)}, want $g")
@@ -600,7 +602,7 @@ class LlmSpec extends AnyFunSuite {
       .groupBy($"g", $"id").agg(min($"sh").as("sh"))
       .repartition(13)
     val got = df.groupBy($"g")
-      .agg(graft.functions.BoundedMinK.collect_min_k($"id", $"sh", k).as("mk"))
+      .agg(graft.functions.BoundedMinK.collect_min_k($"id", Seq("sh"), k).as("mk"))
       .select($"g", $"mk.ms", $"mk.n")
       .collect().map(r => (r.getLong(0),
         r.getSeq[Row](1).map(x => (x.getLong(0), x.getLong(1))), r.getLong(2)))
@@ -618,10 +620,33 @@ class LlmSpec extends AnyFunSuite {
     // and the plan takes the hash-agg shape (ObjectHashAggregate), not
     // a sort aggregate — the reason this beats the rank-window form
     val plan = df.groupBy($"g")
-      .agg(graft.functions.BoundedMinK.collect_min_k($"id", $"sh", k))
+      .agg(graft.functions.BoundedMinK.collect_min_k($"id", Seq("sh"), k))
       .queryExecution.executedPlan.toString
     assert(plan.contains("ObjectHashAggregate"),
       s"expected ObjectHashAggregate:\n$plan")
+    // the same aggregate over a two-word (lo, hi) payload — the capped
+    // 128-bit banding's input — against the same collect-then-slice
+    // form; the member structs take the input words' names
+    val df2 = (rows.map { case (g, id, sh) => (g, id, sh, sh * 31L + g) })
+      .toDF("g", "id", "lo", "hi")
+      .groupBy($"g", $"id").agg(min($"lo").as("lo"), max($"hi").as("hi"))
+      .repartition(13)
+    def triples(df: org.apache.spark.sql.DataFrame): Seq[(Long, Seq[(Long, Long, Long)], Long)] =
+      df.collect().map(r => (r.getLong(0),
+        r.getSeq[Row](1).map(x => (x.getLong(0), x.getLong(1), x.getLong(2))),
+        r.getLong(2))).toSeq.sortBy(_._1)
+    val got2 = df2.groupBy($"g")
+      .agg(graft.functions.BoundedMinK.collect_min_k($"id", Seq("lo", "hi"), k)
+        .as("mk"))
+      .select($"g", $"mk.ms", $"mk.n")
+    import org.apache.spark.sql.types.{ArrayType, StructType}
+    assert(got2.schema("ms").dataType.asInstanceOf[ArrayType].elementType
+      .asInstanceOf[StructType].fieldNames.toSeq == Seq("id", "lo", "hi"))
+    val want2 = df2.groupBy($"g")
+      .agg(slice(sort_array(collect_list(struct($"id", $"lo", $"hi"))), 1, k)
+        .as("ms"), count(lit(1)).as("n"))
+      .select($"g", $"ms", $"n")
+    assert(triples(got2) == triples(want2))
   }
 
   test("CollectMinK counts null members in n but keeps them out of the heap") {
@@ -639,7 +664,7 @@ class LlmSpec extends AnyFunSuite {
       (2L, 20L, 200L), (2L, 21L, 201L), (2L, 22L, 202L)
     ).toDF("g", "id", "sh").repartition(5)
     val got = df.groupBy($"g")
-      .agg(graft.functions.BoundedMinK.collect_min_k($"id", $"sh", k).as("mk"))
+      .agg(graft.functions.BoundedMinK.collect_min_k($"id", Seq("sh"), k).as("mk"))
       .select($"g", $"mk.ms", $"mk.n")
       .collect().map(r => (r.getLong(0),
         (r.getSeq[Row](1).map(x => (x.getLong(0), x.getLong(1))), r.getLong(2))))

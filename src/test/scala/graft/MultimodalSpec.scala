@@ -737,14 +737,23 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("wide banding geometry: auto table, explicit equivalence, loud failures, capped sentinels") {
     import graft.llm.Dedup
-    // the measured dispatch points of autoGeometry128 (ProbeWide r17)
-    assert(Dedup.autoGeometry128(7) == (9, 2))   // 36 keys of >=28 bits
-    assert(Dedup.autoGeometry128(8) == (10, 2))  // 45 keys of >=24 bits
-    assert(Dedup.autoGeometry128(3) == (4, 1))   // 4 keys of 32 bits
+    // the measured dispatch points of the two-word search (ProbeWide r17)
+    assert(Dedup.autoGeometry(7, words = 2) == (9, 2))   // 36 keys of >=28 bits
+    assert(Dedup.autoGeometry(8, words = 2) == (10, 2))  // 45 keys of >=24 bits
+    assert(Dedup.autoGeometry(3, words = 2) == (4, 1))   // 4 keys of 32 bits
+    // the whole two-word table over its satisfiable range
+    val expect = Map(0 -> (2, 1), 1 -> (2, 1), 2 -> (3, 1), 3 -> (4, 1),
+      4 -> (5, 1), 5 -> (7, 2), 6 -> (8, 2), 7 -> (9, 2), 8 -> (10, 2),
+      9 -> (12, 3), 10 -> (13, 3), 11 -> (14, 3), 12 -> (15, 3),
+      13 -> (16, 3), 14 -> (18, 4), 15 -> (19, 4))
+    expect.foreach { case (h, g) =>
+      assert(Dedup.autoGeometry(h, words = 2) == g,
+        s"h=$h: got ${Dedup.autoGeometry(h, words = 2)}, want $g")
+    }
     // every auto choice satisfies pigeonhole, the 24-bit floor, the
     // combo cap, and the one-Long key constraint
     (0 to 12).foreach { h =>
-      val (b, k) = Dedup.autoGeometry128(h)
+      val (b, k) = Dedup.autoGeometry(h, words = 2)
       assert(k >= 1 && k <= b - h, s"pigeonhole violated at h=$h: ($b,$k)")
       assert(k * (128 / b) >= 24, s"key-width floor violated at h=$h: ($b,$k)")
       assert((0 until b).combinations(k).size <= Dedup.ComboCap,
@@ -753,20 +762,26 @@ class MultimodalSpec extends AnyFunSuite {
         s"one-Long key constraint violated at h=$h: ($b,$k)")
     }
     // past the feasible range the failure is loud
-    intercept[IllegalArgumentException] { Dedup.autoGeometry128(16) }
+    intercept[IllegalArgumentException] { Dedup.autoGeometry(16, words = 2) }
     // half-specified geometry is rejected like the 64-bit path
     intercept[IllegalArgumentException] {
-      Dedup.hammingCandidatesFromFp128(
+      Dedup.hammingCandidatesFromFp(
         Seq((1L, 1L, 1L)).toDF("id", "lo", "hi"), blocks = 10,
         maxHamming = 8, keyBlocks = 0)
     }
     // a key that cannot fit one Long is rejected loudly
     val e = intercept[IllegalArgumentException] {
-      Dedup.hammingCandidatesFromFp128(
+      Dedup.hammingCandidatesFromFp(
         Seq((1L, 1L, 1L)).toDF("id", "lo", "hi"), blocks = 3,
         maxHamming = 1, keyBlocks = 2)
     }
     assert(e.getMessage.contains("fit one Long"), e.getMessage)
+    // no key-bit floor is measured past two words: a third is rejected
+    intercept[IllegalArgumentException] {
+      Dedup.hammingCandidatesFromFp(
+        Seq((1L, 1L, 1L, 1L)).toDF("id", "lo", "mid", "hi"), blocks = 0,
+        maxHamming = 8, keyBlocks = 0)
+    }
     // geometry is a performance knob only: every exhaustive choice
     // emits the same verified pair set
     val ids = (0L until 400L).toSeq
@@ -784,7 +799,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(pairs(12, 2) == auto, "explicit (12,2) diverged")
     // capped path: 4 identical images, cap 3 — pairs among the 3
     // lowest ids once each plus one loud sentinel per over-cap
-    // bucket, with the bucket keys of comboKeyExprs128 exactly
+    // bucket, with the two-word bucket keys of comboKeyExprs exactly
     val media = Seq(1L, 2L, 3L, 4L)
       .map(id => (id, Multimodal.syntheticBmp(7L)))
       .toDF("media_id", "payload")
@@ -801,10 +816,10 @@ class MultimodalSpec extends AnyFunSuite {
       graft.functions.PerceptualHash.d_a_hash($"payload").as("h"))
       .select($"h.dh".as("lo"), $"h.ah".as("hi"))
     val expectedKeys = h128.select(posexplode(array(
-        Dedup.comboKeyExprs128($"lo", $"hi", 10, 2): _*)).as(Seq("c", "k")))
+        Dedup.comboKeyExprs(Seq($"lo", $"hi"), 10, 2): _*)).as(Seq("c", "k")))
       .select($"k").as[Long].collect().toSeq.sorted
     assert(sentinels.map(_._2).sorted == expectedKeys,
-      "sentinel bucket keys diverged from comboKeyExprs128")
+      "sentinel bucket keys diverged from comboKeyExprs")
     spark.catalog.clearCache()
   }
 }

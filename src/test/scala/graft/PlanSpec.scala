@@ -124,14 +124,14 @@ class PlanSpec extends AnyFunSuite {
     val small = graft.core.Caching.eager(
       (0L until 2000L).map(i => (i, i * 2654435761L, i * 40503L))
         .toDF("id", "lo", "hi"))
-    val pSmall = graft.llm.Dedup.hammingCandidatesFromFp128(small, 0, 7, 0)
+    val pSmall = graft.llm.Dedup.hammingCandidatesFromFp(small, 0, 7, 0)
       .queryExecution.executedPlan.toString
     assert(pSmall.contains("BroadcastHashJoin"),
       s"2000 docs × 36 combos is provably small — broadcast:\n$pSmall")
     val big = graft.core.Caching.eager(
       spark.range(0L, 150000L)
         .selectExpr("id", "id * 2654435761 AS lo", "id * 40503 AS hi"))
-    val pBig = graft.llm.Dedup.hammingCandidatesFromFp128(big, 0, 7, 0)
+    val pBig = graft.llm.Dedup.hammingCandidatesFromFp(big, 0, 7, 0)
       .queryExecution.executedPlan.toString
     assert(pBig.contains("SortMergeJoin"),
       s"5.4M keyed rows must sort-merge:\n$pBig")

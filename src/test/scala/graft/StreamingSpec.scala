@@ -555,6 +555,30 @@ class StreamingSpec extends AnyFunSuite {
       s"missed=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
   }
 
+  test("streaming Hamming twin rejects an explicit geometry the batch twin rejects") {
+    // the twin shares the batch operator's geometry resolver: a
+    // non-exhaustive explicit geometry (keyBlocks 3 > blocks 9 −
+    // maxHamming 7) or one past 64 blocks throws while the query is
+    // BUILT, before any stream starts — instead of running and
+    // silently missing pairs (or banding zero-width blocks)
+    import org.apache.spark.sql.types._
+    val dir = Files.createTempDirectory("graft_stream_geom")
+    val stream = spark.readStream.schema(StructType(Seq(
+        StructField("media_id", LongType), StructField("ts", TimestampType),
+        StructField("payload", BinaryType))))
+      .parquet(dir.toString)
+    val e = intercept[IllegalArgumentException] {
+      EventStream.streamingImageNearDupCandidates(stream, "media_id",
+        "payload", "ts", blocks = 9, maxHamming = 7, keyBlocks = 3)
+    }
+    assert(e.getMessage.contains("pigeonhole"), e.getMessage)
+    intercept[IllegalArgumentException] {
+      EventStream.streamingAudioNearDupCandidates(stream, "media_id",
+        "payload", "ts", blocks = 65, maxHamming = 7, keyBlocks = 1)
+    }
+    assert(spark.streams.active.isEmpty)
+  }
+
   test("streaming audio near-dup emits exactly the batch pair set") {
     // the WAV twin of the image stream test: same bucket machinery,
     // acoustic fingerprint kernel; once-per-pair raw output equals the
@@ -661,7 +685,7 @@ class StreamingSpec extends AnyFunSuite {
     val sh = media.limit(1).select(
       graft.functions.PerceptualHash.d_hash($"payload").as("sh"))
     val expectedKeys = sh.select(posexplode(array(
-        graft.llm.Dedup.comboKeyExprs($"sh", 9, 2): _*)).as(Seq("c", "k")))
+        graft.llm.Dedup.comboKeyExprs(Seq($"sh"), 9, 2): _*)).as(Seq("c", "k")))
       .select($"k").as[Long].collect().toSeq.sorted
     assert(sentinels.map(_._2).sorted == expectedKeys,
       "sentinel bucket keys diverged from comboKeyExprs")
