@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * Why this beats the banding probe for SMALL query sets: the banding
   * form pays a 36-combo (C(9,2)) map-side key EXPANSION of the whole
   * store — measured 30.4 s to materialize at a 5M-row store vs 0.42 s
-  * for the bare columnar scan (ProbeTouch) — while this kernel keeps
+  * for the bare columnar scan (SCALE.md r13, q103) — while this kernel keeps
   * the store scan bare and does |store|·|batch| popcounts map-side
   * (2.4G popcounts ≈ the scan floor at a 487-doc batch). The banding
   * probe stays the shape for LARGE query sets, where |batch| popcounts

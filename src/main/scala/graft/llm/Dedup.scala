@@ -520,6 +520,9 @@ object Dedup {
     * simhash expression evaluates once, not per join side. */
   def simhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         bands: Int = 8, maxHamming: Int = 7): DataFrame = {
+    // geometry is checked before the fingerprints are cached, so a bad
+    // argument runs no job and leaves no cache behind
+    simhashGeometry(bands, maxHamming)
     val fp = graft.core.Caching.eager(df.select(col(idCol).as("id"),
         simhash64(TextStats.tokens(col(textCol))).as("sh")))
     simhashCandidatesFromFp(fp, bands, maxHamming)
@@ -534,8 +537,14 @@ object Dedup {
     * cached frame) fingerprints the corpus exactly once. */
   def simhashCandidatesFromFp(fp: DataFrame, bands: Int = 8,
                               maxHamming: Int = 7): DataFrame = {
-    require(bands > 0 && 64 % bands == 0, s"bands must divide 64, got $bands")
+    simhashGeometry(bands, maxHamming)
     hammingCandidatesFromFp(fp, bands, maxHamming, keyBlocks = 1)
+  }
+
+  /** The classic scheme's checks: equal bands and one key block. */
+  private def simhashGeometry(bands: Int, maxHamming: Int): Unit = {
+    require(bands > 0 && 64 % bands == 0, s"bands must divide 64, got $bands")
+    geometry(1, bands, maxHamming, keyBlocks = 1)
   }
 
   /** Banding geometry `(blocks, keyBlocks)` sized from the Hamming
@@ -679,8 +688,8 @@ object Dedup {
     * ~25 B/keyed row — comfortably inside executor memory, and the
     * regime where the measured crossover favors broadcast: 2.4 s
     * broadcast vs 7.8 s sort-merge at 36×50k = 1.8M keyed rows;
-    * 9.7 s sort-merge vs 43.9 s broadcast-spill at 18M — ProbeGeom
-    * r16). Above it the join carries a MERGE hint. The dispatch reads
+    * 9.7 s sort-merge vs 43.9 s broadcast-spill at 18M — SCALE.md
+    * r16 and r22). Above it the join carries a MERGE hint. The dispatch reads
     * the TRUE size (fp.count() × combination count), never the
     * planner's Generate estimate, which reports the un-exploded
     * child's bytes. */
@@ -694,12 +703,12 @@ object Dedup {
     * explicit batch-side build measured 2× SLOWER than sort-merge at
     * 1.8M keyed rows (q103 at 500k docs: 42.1 s merge vs 89.2 s
     * broadcast, same session), even though the identical probe
-    * ISOLATED measures the same build 2.5× FASTER (ProbeTouch,
+    * ISOLATED measures the same build 2.5× FASTER (SCALE.md r16,
     * 450k store × 50k batch: 6.5-13.6 s broadcast vs 18.0-25.2 s
     * merge). The embedded measurement is binding because embedding is
     * the contract. The bound sits just above the largest
     * embedded-measured-good decade — 180k keyed rows (5k-doc batches:
-    * q103 flat at sf1, and ProbeTouch at 495k×5k measured the
+    * q103 flat at sf1, and the isolated probe at 495k×5k measured the
     * broadcast 2.7× faster than the pre-dispatch planner choice) —
     * and well under the embedded-measured-bad 1.8M.
     *
@@ -873,7 +882,7 @@ object Dedup {
       // the estimate lands under the 10 MB broadcast threshold while
       // the true exploded side is GIGABYTES (measured: a 6.5 GiB
       // driver-side broadcast build at 500k docs × 120 combos,
-      // spilling the block store — ProbeGeom r16). The dispatch is
+      // spilling the block store — SCALE.md r16). The dispatch is
       // the hammingProbeTouch `bruteBelow` discipline applied to the
       // join strategy: fp is materialized by this operator's contract,
       // so counting it is one cheap cached-scan job, and the TRUE
@@ -932,7 +941,7 @@ object Dedup {
       // a 10^7-struct array per (combo, key) task, the exact executor
       // OOM the cap exists to prevent), and a rank-window form pays a
       // per-partition sort of every keyed row (measured 1.6-1.9×
-      // slower, ProbeCap). The cap lowest ids = the streaming twin's
+      // slower, SCALE.md r13). The cap lowest ids = the streaming twin's
       // arrival-order semantics under ordered ids; the true bucket
       // size rides along as the sentinel witness.
       val grouped = keyed
@@ -988,7 +997,7 @@ object Dedup {
     * broadcast row and a codegen xor/popcount kernel
     * ([[graft.functions.HammingKernels]]) tests every store row
     * against all of them during the bare columnar scan. Measured at a
-    * 5M-row store (ProbeTouch): the banding probe's 36-combo map-side
+    * 5M-row store (SCALE.md r13, q103): the banding probe's 36-combo map-side
     * key expansion alone costs 30.4 s materialized (the probe ~15 s)
     * vs 0.42 s for the bare scan — the kernel keeps the scan bare, so
     * a ~500-doc arrival pays ~|store|·|batch| popcounts ≈ the scan
@@ -1425,7 +1434,7 @@ object Dedup {
     // LlmSpec). The clone is MEMOIZED per caller session and reused
     // across invocations: a fresh newSession() pays an executor-side
     // first-job session-state setup on EVERY call (~0.8 s at sf0.1,
-    // measured in ProbeCcClone — a reused clone's second round drops
+    // measured, SCALE.md r13 — a reused clone's second round drops
     // back to the caller session's round time), which the round-12
     // per-invocation clone charged to every CC invocation (q67
     // 2.09 → 3.25 s). The caller's runtime conf is copied onto the

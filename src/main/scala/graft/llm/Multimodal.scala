@@ -351,6 +351,9 @@ object Multimodal {
                         payloadCol: String, blocks: Int = 0,
                         maxHamming: Int = 7, keyBlocks: Int = 0,
                         maxBucketSize: Int = 0): DataFrame = {
+    // geometry is checked before the fingerprints are cached, so a
+    // bad argument runs no job and leaves no cache behind
+    Dedup.geometry(1, blocks, maxHamming, keyBlocks)
     val fp = graft.core.Caching.eager(media.select(
         col(idCol).cast("long").as("id"),
         graft.functions.PerceptualHash.d_hash(col(payloadCol)).as("sh"))
@@ -368,7 +371,7 @@ object Multimodal {
     * arithmetic (no wide-path decade table was recorded).
     *
     * DIFFERENT SIMILARITY CONTRACT, measured before shipping
-    * (ProbeWide r17): pairs at combined dHash+aHash Hamming <=
+    * (r17, SCALE.md r22): pairs at combined dHash+aHash Hamming <=
     * `maxHamming` over 128 bits. The default 8 is the measured
     * operating point matching the 64-bit h≤7 one on every fixture
     * family: true 64-bit pairs all sit at h128 ≤ 8 (dense AND sparse
@@ -382,6 +385,7 @@ object Multimodal {
                             payloadCol: String, blocks: Int = 0,
                             maxHamming: Int = 8, keyBlocks: Int = 0,
                             maxBucketSize: Int = 0): DataFrame = {
+    Dedup.geometry(2, blocks, maxHamming, keyBlocks)
     val fp = graft.core.Caching.eager(media.select(
         col(idCol).cast("long").as("id"),
         graft.functions.PerceptualHash.d_a_hash(col(payloadCol)).as("h"))
@@ -503,6 +507,7 @@ object Multimodal {
                         payloadCol: String, blocks: Int = 0,
                         maxHamming: Int = 7, keyBlocks: Int = 0,
                         maxBucketSize: Int = 0): DataFrame = {
+    Dedup.geometry(1, blocks, maxHamming, keyBlocks)
     val fp = graft.core.Caching.eager(media.select(
         col(idCol).cast("long").as("id"),
         graft.functions.AudioFingerprint.audio_fp(col(payloadCol)).as("sh"))
@@ -517,7 +522,7 @@ object Multimodal {
     * [[Dedup.hammingCandidatesFromFp]]: the audio leg of the
     * r17 wide-banding escape (see [[imageNearDupPairsWide]] for the
     * 64-bit ceiling it escapes). DIFFERENT SIMILARITY CONTRACT,
-    * measured before shipping (ProbeWide r17, family-membership
+    * measured before shipping (r17, SCALE.md r22; family-membership
     * truth): pairs at Hamming <= `maxHamming` over the 128 grid
     * bits. The default 7 is the measured operating point — dense
     * fixture same-family pairs all at h ≤ 7, sparse at h ≤ 6, the
@@ -536,6 +541,7 @@ object Multimodal {
                             payloadCol: String, blocks: Int = 0,
                             maxHamming: Int = 7, keyBlocks: Int = 0,
                             maxBucketSize: Int = 0): DataFrame = {
+    Dedup.geometry(2, blocks, maxHamming, keyBlocks)
     val fp = graft.core.Caching.eager(media.select(
         col(idCol).cast("long").as("id"),
         graft.functions.AudioFingerprint.audio_fp_wide(col(payloadCol))

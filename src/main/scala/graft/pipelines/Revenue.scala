@@ -53,18 +53,8 @@ object Revenue {
     * evader, one with R+F is a written-up fine at 10.00 per unit
     * quantity (exact integer cents by construction).
     */
-  def adsFareRevenueServiceTypeMonthly(s: SparkSession, dir: String): DataFrame =
-    adsFareRevenueServiceTypeMonthlyFrom(Tables.region(s, dir),
-      Tables.orders(s, dir), Tables.lineitem(s, dir))
-
-  /** Same plan over caller-supplied inputs — the hook the bucketed-
-    * layout path uses (`tools/ProbeQ56Bucketed`): pass `spark.table`
-    * handles of facts bucketed by orderkey and the orderkey join (and
-    * the fine-leg pre-aggregation, which groups on the same key)
-    * plans with ZERO exchanges on the bucketed sides. */
-  def adsFareRevenueServiceTypeMonthlyFrom(regionRaw: DataFrame,
-      ordersRaw: DataFrame, lineitemRaw: DataFrame): DataFrame = {
-    val region = broadcast(regionRaw
+  def adsFareRevenueServiceTypeMonthly(s: SparkSession, dir: String): DataFrame = {
+    val region = broadcast(Tables.region(s, dir)
       .select(col("r_regionkey"), col("r_name").as("region_id")))
 
     // the projected orders subplan appears twice below (fare rows +
@@ -84,7 +74,7 @@ object Revenue {
     // work of the old shape happens ONCE per output group (~10^5
     // rows) after the agg. format_string("%04d-%02d") equals
     // date_format "yyyy-MM" on the whole AD 1..9999 domain.
-    val orders = ordersRaw
+    val orders = Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_custkey"),
         (year(col("o_orderdate")) * 100 + month(col("o_orderdate"))).as("ym"),
         when(col("o_orderpriority") === "1-URGENT", 1)
@@ -120,7 +110,7 @@ object Revenue {
     //     left side arrives already hash-partitioned on the join key —
     //     EnsureRequirements reuses that exchange, so the join adds
     //     only the orders-side shuffle.
-    val fineAgg = lineitemRaw
+    val fineAgg = Tables.lineitem(s, dir)
       .where(col("l_returnflag") === "R")
       .select(col("l_orderkey"),
         when(col("l_linestatus") === "F", 1L).otherwise(0L).as("is_rf"),
@@ -186,17 +176,8 @@ object Revenue {
     * cents, ext_cents·(100−disc_pct) div 100, computed per leg BEFORE
     * the sum so the truncation point is identical on both engines.
     */
-  def adsRevenueProportionProductTypeMonthly(s: SparkSession, dir: String): DataFrame =
-    adsRevenueProportionProductTypeMonthlyFrom(Tables.region(s, dir),
-      Tables.orders(s, dir), Tables.lineitem(s, dir))
-
-  /** Input-parameterized twin (see
-    * [[adsFareRevenueServiceTypeMonthlyFrom]]): with facts bucketed by
-    * orderkey the shuffle the sf100 measurement showed carrying this
-    * query disappears into the layout. */
-  def adsRevenueProportionProductTypeMonthlyFrom(regionRaw: DataFrame,
-      ordersRaw: DataFrame, lineitemRaw: DataFrame): DataFrame = {
-    val region = broadcast(regionRaw
+  def adsRevenueProportionProductTypeMonthly(s: SparkSession, dir: String): DataFrame = {
+    val region = broadcast(Tables.region(s, dir)
       .select(col("r_regionkey"), col("r_name").as("region_id")))
 
     val productNames = array(
@@ -210,13 +191,13 @@ object Revenue {
     // custkey%5); the dim broadcast, product-name lookup, and month
     // formatting all run on the ~10^5 aggregated groups instead of
     // 10^8 legs. No R-filter analogue here: every leg contributes.
-    val ord = ordersRaw
+    val ord = Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_custkey"),
         (year(col("o_orderdate")) * 100 + month(col("o_orderdate"))).as("ym"))
 
     // net_cents derives from leg columns only — computed in the scan
     // projection so the join shuffle carries one fewer column
-    val legs = lineitemRaw
+    val legs = Tables.lineitem(s, dir)
       .select(col("l_orderkey"),
         (col("l_partkey") % 7).cast("int").as("pidx"),
         round(col("l_quantity")).cast("long").as("qty"),

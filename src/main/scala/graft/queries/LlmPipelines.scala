@@ -436,7 +436,7 @@ object LlmPipelines {
     * which DuckDB recomputes by brute force, pinning the ground-truth
     * side — and a recall floor computed by joining the IVF hits
     * against that exact top-k. The floor (0.75) sits under the
-    * measured recall with margin (tools/ProbeIvf at nCentroids=16,
+    * measured recall with margin (SCALE.md r7 at nCentroids=16,
     * nProbe=8: 0.884 at sf0.001, 0.828 at sf0.01, 0.856 at sf0.1 —
     * stable because the centroid sample is a deterministic hash
     * order, not a data order; a partitioning defect that strands
@@ -2875,7 +2875,7 @@ object LlmPipelines {
     * is one IEEE double division (identical bit-for-bit in both
     * engines), ties break on doc_id, and the 25% cut is pure integer
     * arithmetic (rn·4 <= N — no division). Empty docs never rank.
-    * HONESTY NOTE (measured, ProbeDsir/this oracle's sums): the
+    * HONESTY NOTE (measured, SCALE.md r22 and this oracle's sums): the
     * fixture's `lang` label carries ZERO lexical signal — every
     * language draws from the same synthetic vocabulary — so the
     * per-lang kept counts hover at ~25% each; the operator's value
@@ -2900,8 +2900,8 @@ object LlmPipelines {
       // r18 REFUTED attempt, kept as the r17-shape on purpose: a
       // shared-aggregation dual-LM trainer (one (all, en-slice)
       // conditional count per n-gram order feeding both LMs) was
-      // built and A/B-measured same-JVM (tools/ProbeShapes, sf0.1 +
-      // sf1): +2 AQE stage-jobs, no wall/cpu win, and the shared form
+      // built and A/B-measured same-JVM (sf0.1 + sf1): +2 AQE
+      // stage-jobs, no wall/cpu win, and the shared form
       // structurally LOSES the `lang = 'en'` scan pushdown the
       // en-slice subtrees get here — at a selective slice the two-LM
       // form reads less data, not more. See SCALE.md, "Round-18
@@ -3595,8 +3595,8 @@ object LlmPipelines {
 
   /** The q106 oracle: q80's generated pixel/bit table evaluated at the
     * WIDE contract — pairs whose combined dHash + aHash disagreement
-    * count over all 128 bits is <= 8 (the ProbeWide r17 measured
-    * operating point), one `hamming` column. Same CTEs as [[q80Oracle]]
+    * count over all 128 bits is <= 8 (the r17 measured operating
+    * point, SCALE.md r22), one `hamming` column. Same CTEs as [[q80Oracle]]
     * (the fingerprint definition did not change — only its WIDTH as a
     * banding key), so the two oracles stay in sync by construction. */
   private def q106Oracle: String = {
@@ -3641,7 +3641,7 @@ object LlmPipelines {
     * (10, 2) geometry keys carry >= 24 bits — same banding join
     * shape, collision term ~2^13 smaller by arithmetic (no wide-path
     * decade table was recorded). Contract: combined Hamming <= 8 over 128
-    * bits, the measured operating point (ProbeWide r17: true 64-bit
+    * bits, the measured operating point (r17, SCALE.md r22: true 64-bit
     * pairs all <= 8, closest non-pair 27, JPEG re-encode twins at 0).
     * Both hashes come from ONE codegen'd decode
     * ([[graft.functions.PerceptualHash.d_a_hash]]). */
@@ -3705,7 +3705,7 @@ object LlmPipelines {
     * banding: same energy-gradient sketch at double the grid
     * resolution, default geometry (9, 2) = q84's 36 combination keys
     * at ~28 bits instead of ~15. Contract: Hamming <= 7 over the 128
-    * grid bits, the measured operating point (ProbeWide r17:
+    * grid bits, the measured operating point (r17, SCALE.md r22:
     * same-family fixture pairs all <= 7, closest cross-family 31 —
     * the wide pair set IS the family-clique truth, strictly beyond
     * q84's, whose coarse grid loses ~0.2% of family pairs). */

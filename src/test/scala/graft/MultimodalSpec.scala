@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.llm.Multimodal
+import org.apache.spark.GraftTestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -361,7 +365,7 @@ class MultimodalSpec extends AnyFunSuite {
         PerceptualHash.dhash64(b), s"gif dhash id=$id")
     }
     // JPEG is lossy: at real image sizes the hash sits within the
-    // banding radius of the uncompressed twin. Measured (ProbeJpeg):
+    // banding radius of the uncompressed twin. Measured (SCALE.md r22):
     // 72x64 → Hamming 0 at every quality 0.75-1.0; the pathological
     // 9x8 native size → ≤7 only at quality 1.0. Pin both regimes.
     (0L until 60L).foreach { id =>
@@ -648,7 +652,7 @@ class MultimodalSpec extends AnyFunSuite {
     } yield (a, b, h)).toSet
     assert(got == want, s"got ${got.size} pairs, want ${want.size}")
     assert(want.nonEmpty, "fixture families must produce near-dup pairs")
-    // the ProbeWide r17 operating-point claim, end to end: the wide
+    // the r17 operating-point claim (SCALE.md r22), end to end: the wide
     // contract at h<=8 emits EXACTLY the 64-bit h<=7 pair set on the
     // fixture (true pairs all within 8; closest non-pair at 27)
     val narrow = Multimodal.imageNearDupPairs(imgs, "media_id", "payload")
@@ -664,9 +668,10 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("wide image banding finds BMP/JPEG re-encode twins end to end") {
-    // the r9 JPEG discipline applied to the wide contract: ProbeWide
-    // measured the re-encode twins at h128 = 0, so every (bmp, jpeg)
-    // twin must surface through the single-decode kernel + wide banding
+    // the r9 JPEG discipline applied to the wide contract: the r17
+    // measurement (SCALE.md r22) put the re-encode twins at h128 = 0,
+    // so every (bmp, jpeg) twin must surface through the single-decode
+    // kernel + wide banding
     val ids = (0L until 80L).toSeq
     def jpegOf(id: Long): Array[Byte] = {
       val up = Multimodal.resizeBmpBytes(Multimodal.syntheticBmp(id), 72, 64).get
@@ -712,7 +717,7 @@ class MultimodalSpec extends AnyFunSuite {
     } yield (a, b, h)).toSet
     assert(got == want, s"got ${got.size} pairs, want ${want.size}")
     assert(want.nonEmpty, "fixture families must produce near-dup pairs")
-    // the ProbeWide r17 family-truth claim, end to end: at h<=7 over
+    // the r17 family-truth claim (SCALE.md r22), end to end: at h<=7 over
     // the doubled grid the wide pair set IS the family-clique truth —
     // every same-family pair (max measured distance 7), zero
     // cross-family pairs (closest measured at 31)
@@ -737,7 +742,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("wide banding geometry: auto table, explicit equivalence, loud failures, capped sentinels") {
     import graft.llm.Dedup
-    // the measured dispatch points of the two-word search (ProbeWide r17)
+    // the measured dispatch points of the two-word search (SCALE.md r22)
     assert(Dedup.autoGeometry(7, words = 2) == (9, 2))   // 36 keys of >=28 bits
     assert(Dedup.autoGeometry(8, words = 2) == (10, 2))  // 45 keys of >=24 bits
     assert(Dedup.autoGeometry(3, words = 2) == (4, 1))   // 4 keys of 32 bits
@@ -821,5 +826,48 @@ class MultimodalSpec extends AnyFunSuite {
     assert(sentinels.map(_._2).sorted == expectedKeys,
       "sentinel bucket keys diverged from comboKeyExprs")
     spark.catalog.clearCache()
+  }
+
+  test("pair entry points reject a bad geometry before any job or cache") {
+    import graft.llm.Dedup
+    val sc = spark.sparkContext
+    val media = Seq(1L, 2L).map(id => (id, Multimodal.syntheticBmp(id)))
+      .toDF("media_id", "payload")
+    val docs = Seq((1L, "a b c d"), (2L, "a b c e")).toDF("doc_id", "text")
+    // h<=7 over 9 blocks leaves 2 clean blocks, so 3 key blocks break
+    // pigeonhole; simhash's 9 bands do not divide 64
+    val calls = Seq[(String, () => Any)](
+      "imageNearDupPairs" -> (() => Multimodal.imageNearDupPairs(media,
+        "media_id", "payload", blocks = 9, maxHamming = 7, keyBlocks = 3)),
+      "imageNearDupPairsWide" -> (() => Multimodal.imageNearDupPairsWide(
+        media, "media_id", "payload", blocks = 9, maxHamming = 7,
+        keyBlocks = 3)),
+      "audioNearDupPairs" -> (() => Multimodal.audioNearDupPairs(media,
+        "media_id", "payload", blocks = 9, maxHamming = 7, keyBlocks = 3)),
+      "audioNearDupPairsWide" -> (() => Multimodal.audioNearDupPairsWide(
+        media, "media_id", "payload", blocks = 9, maxHamming = 7,
+        keyBlocks = 3)),
+      "simhashCandidates" -> (() => Dedup.simhashCandidates(docs, "doc_id",
+        "text", bands = 9, maxHamming = 7)))
+    val faults = calls.flatMap { case (name, call) =>
+      spark.catalog.clearCache()
+      GraftTestBridge.drain(sc)
+      val jobs = new AtomicInteger
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      sc.addSparkListener(l)
+      try {
+        intercept[IllegalArgumentException] { call() }
+        GraftTestBridge.drain(sc)
+      } finally sc.removeSparkListener(l)
+      Seq(s"$name ran ${jobs.get} job(s)" -> (jobs.get != 0),
+        s"$name left a cached block" ->
+          !spark.sharedState.cacheManager.isEmpty)
+        .collect { case (fault, true) => fault }
+    }
+    spark.catalog.clearCache()
+    assert(faults.isEmpty, faults.mkString("; "))
   }
 }

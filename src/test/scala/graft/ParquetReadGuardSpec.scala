@@ -5,16 +5,20 @@ import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Every engine parquet read goes through `Tables.readParquet`, which
+/** Source guards over the Scala tree.
+  *
+  * Every engine parquet read goes through `Tables.readParquet`, which
   * resolves the schema on the driver; a plain `spark.read…parquet(`
-  * anywhere else brings back the one-task schema job per read. This
-  * scans the engine sources and fails on any such read outside
-  * `core/Tables.scala`, with two exclusions:
-  *  - `tools/`: one-off probe mains, not engine paths, slated for
-  *    deletion (ROADMAP item 2);
-  *  - `Bench.scala`: its `floor_sec` measures a plain read on purpose
-  *    (the per-query floor a reader compares the totals against), and
-  *    its warm-up reads the same table.
+  * anywhere else brings back the one-task schema job per read. The
+  * read guard scans the main sources and fails on any such read outside
+  * `core/Tables.scala`, with one exclusion: `Bench.scala`, whose
+  * `floor_sec` measures a plain read on purpose (the per-query floor a
+  * reader compares the totals against), and whose warm-up reads the
+  * same table.
+  *
+  * The citation guard keeps comments from naming dev tools that no
+  * longer exist: a measurement is cited by its SCALE.md section, and a
+  * tool is cited only while its file is in the tree.
   */
 class ParquetReadGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
@@ -24,9 +28,12 @@ class ParquetReadGuardSpec extends AnyFunSuite {
 
   private def excluded(p: Path): Boolean = {
     val rel = root.relativize(p).toString
-    rel.startsWith("tools/") || rel == "Bench.scala" ||
-      rel == "core/Tables.scala"
+    rel == "Bench.scala" || rel == "core/Tables.scala"
   }
+
+  private def scalaFiles(dir: Path): Seq[Path] =
+    Files.walk(dir).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
 
   test("the regex sees single-line and chained reads") {
     assert(plainRead.findFirstIn("spark.read.parquet(p)").nonEmpty)
@@ -39,8 +46,7 @@ class ParquetReadGuardSpec extends AnyFunSuite {
 
   test("no plain parquet read in the engine outside core/Tables.scala") {
     assert(Files.isDirectory(root), s"run from the repo root: $root")
-    val files = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
+    val files = scalaFiles(root)
     assert(files.exists(_.endsWith("llm/Admission.scala")))
     val hits = files.filterNot(excluded).flatMap { f =>
       val src = new String(Files.readAllBytes(f), "UTF-8")
@@ -51,5 +57,32 @@ class ParquetReadGuardSpec extends AnyFunSuite {
     }
     assert(hits.isEmpty,
       s"route these through graft.core.Tables.readParquet: ${hits.mkString(", ")}")
+  }
+
+  test("every probe or tools/ name a source cites exists") {
+    val tools = root.resolve("tools")
+    assert(Files.isDirectory(tools), s"run from the repo root: $tools")
+    val srcs = Seq("src/main/scala", "src/test/scala")
+      .flatMap(d => scalaFiles(Paths.get(d)))
+      .map(f => f -> new String(Files.readAllBytes(f), "UTF-8"))
+    val toolNames = scalaFiles(tools)
+      .map(_.getFileName.toString.stripSuffix(".scala")).toSet
+    val defined = srcs.flatMap { case (_, src) =>
+      """\b(?:val|def|object)\s+(\w+)""".r.findAllMatchIn(src).map(_.group(1))
+    }.toSet
+    val cited = """\bProbe[A-Z]\w*|\btools/(\w+)""".r
+    val cites = srcs.flatMap { case (f, src) =>
+      cited.findAllMatchIn(src).map { m =>
+        val line = src.substring(0, m.start).count(_ == '\n') + 1
+        (Option(m.group(1)).getOrElse(m.matched), s"$f:$line")
+      }
+    }
+    // the engine's own probe constants keep this from passing vacuously
+    assert(cites.nonEmpty)
+    val dangling = cites.filterNot { case (name, _) =>
+      toolNames(name) || defined(name)
+    }
+    assert(dangling.isEmpty, "cite a SCALE.md section instead of a " +
+      s"deleted tool: ${dangling.map { case (n, at) => s"$n at $at" }.mkString(", ")}")
   }
 }

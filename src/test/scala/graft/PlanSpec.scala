@@ -93,7 +93,7 @@ class PlanSpec extends AnyFunSuite {
     // frame's 16 bytes/doc — at ~500k docs that sits UNDER the 10 MB
     // broadcast threshold while the true exploded side is gigabytes
     // (measured: a 6.5 GiB driver-side broadcast build at 500k docs ×
-    // 120 combos, ProbeGeom r16). The operator therefore dispatches on
+    // 120 combos, SCALE.md r16). The operator therefore dispatches on
     // fp.count() × combos, never the estimate: explicit broadcast in
     // the provably-small regime, a MERGE hint above it.
     import spark.implicits._
