@@ -14,6 +14,12 @@ import org.apache.spark.sql.functions._
   * signatures never recompute, only batch-hit buckets shuffle) →
   * admitted iff all three clear.
   *
+  * Every entry point — the one-shot audits and the service's
+  * micro-batch steps — materializes the arriving batch ONCE, as one
+  * cached [[arrivalFrame]] carrying every per-row artifact, and every
+  * leg (and every store append) reads a projection of it: one audit
+  * path, no batch-sized cache beside it.
+  *
   * The near-dup rule is the conservative monotone one: a batch doc is
   * flagged if it pairs with ANY seen doc or any smaller-id batch doc,
   * regardless of that partner's own admission — order-independent
@@ -95,35 +101,27 @@ object Admission {
     * ([[Dedup.minhashBandIndex]] rows over exactly `seen`):
     * (id, gate_pass, exact_dup, near_dup, admitted). Computes the
     * seen fingerprints inline — the one-shot form. The service path
-    * passes a PERSISTED fingerprint store instead
-    * ([[auditWithFps]]): recomputing md5 over the whole seen corpus
-    * per arriving batch is an O(corpus)-per-batch term the stored
-    * artifact exists to avoid. The batch must carry each id once
-    * ([[RepeatedIdException]]). */
+    * reads a PERSISTED fingerprint store instead
+    * ([[processMicroBatch]]): recomputing md5 over the whole seen
+    * corpus per arriving batch is an O(corpus)-per-batch term the
+    * stored artifact exists to avoid. The batch must carry each id
+    * once ([[RepeatedIdException]]). */
   def audit(seen: DataFrame, batch: DataFrame, idCol: String,
             textCol: String, index: DataFrame,
             threshold: Double = 0.8): DataFrame =
-    auditWithFps(seen, batch, idCol, textCol, index,
-      seen.select(TextStats.fingerprint(col(textCol)).as("fp")),
+    auditArrival(seen, arrivalFrame(batch, idCol, textCol)._1, idCol,
+      textCol, index, seen.select(TextStats.fingerprint(col(textCol)).as("fp")),
       threshold)
 
-  /** [[audit]] with the seen fingerprints supplied as a table (column
-    * `fp`; duplicates fine — membership is a semi-join). `seen` texts
-    * are still needed by the probe's candidate verification, but are
-    * read ONLY for hot-bucket candidates (semi-join-restricted), never
-    * fingerprint-scanned. */
-  def auditWithFps(seen: DataFrame, batch: DataFrame, idCol: String,
-                   textCol: String, index: DataFrame, fps: DataFrame,
-                   threshold: Double = 0.8): DataFrame =
-    auditArrival(seen, arrivalFrame(batch, idCol, textCol)._1, idCol,
-      textCol, index, fps, threshold)
-
   /** The audit body every entry point shares, over an [[arrivalFrame]]
-    * `b`. Each leg reads a bare projection of `b`: the gate and
-    * fingerprint columns feed the membership broadcast and the exact
-    * leg, the shingles and band hashes feed the probe, and the ids
-    * feed the near-dup flag joins. No leg re-reads the batch plan or
-    * adds a batch-sized cache. */
+    * `b`, with the seen fingerprints `fps` as a table (column `fp`;
+    * duplicates fine — membership is a semi-join). Each leg reads a
+    * bare projection of `b`: the gate and fingerprint columns feed the
+    * membership broadcast and the exact leg, the shingles and band
+    * hashes feed the probe, and the ids feed the near-dup flag joins.
+    * No leg re-reads the batch plan or adds a batch-sized cache.
+    * `seen` texts are read ONLY for the probe's hot-bucket candidates
+    * (semi-join-restricted), never fingerprint-scanned. */
   private def auditArrival(seen: DataFrame, b: DataFrame, idCol: String,
                            textCol: String, index: DataFrame, fps: DataFrame,
                            threshold: Double): DataFrame = {
@@ -147,12 +145,11 @@ object Admission {
       .withColumn("exact_dup",
         coalesce(col("__in_seen"), lit(false)) ||
           col(idCol) > min(col(idCol)).over(wFp))
-    // the probe reads the batch shingles and band rows from the SAME
-    // cache; shingle order 2 matches minhashProbePairs' default, which
-    // is the audit's declared contract
-    val pairs = Dedup.minhashProbePairsFromSh(seen,
-      b.select(col(idCol).cast("long").as("id"), col("__sh").as("sh")),
-      Dedup.bandRows(b, idCol, "__bands"), idCol, textCol, index, threshold)
+    // the probe reads the batch shingles and band hashes from the SAME
+    // cache; shingle order 2 is the probe's declared contract
+    val pairs = Dedup.minhashProbePairs(seen,
+      b.select(col(idCol).cast("long").as("id"), col("__sh").as("sh"),
+        col("__bands").as("bands")), idCol, textCol, index, threshold)
     val batchIds = b.select(col(idCol).cast("long").as("__bid"))
     // both pair orientations from ONE pass over `pairs` (an uncached
     // verify-join subtree — the two-leg union form re-ran it per leg;
@@ -180,9 +177,10 @@ object Admission {
         col("near_dup"), col("admitted"))
   }
 
-  /** [[auditWithFps]] extended to the MULTIMODAL admission decision —
-    * the per-document audit a corpus with image/audio payloads makes
-    * on arrival: the three text legs (gate, exact fingerprint, LSH
+  /** [[audit]] extended to the MULTIMODAL admission decision — the
+    * per-document audit a corpus with image/audio payloads makes on
+    * arrival, with every seen-side artifact supplied as a table: the
+    * three text legs (gate, exact fingerprint against `fps`, LSH
     * near-dup probe) plus one Hamming-membership probe per media
     * modality against that modality's PERSISTED fingerprint store
     * ([[Dedup.hammingProbeTouch]]: store scanned once, batch-hot
@@ -190,13 +188,19 @@ object Admission {
     * `batchAudioFp` are the arriving batch's `(id, sh)` fingerprints
     * with non-null sh (a doc with undecodable — or absent — media
     * never media-flags; it can still fail the text legs); the store
-    * frames have the same shape over the seen corpus. Media legs use
-    * the SAME conservative monotone rule as the text near-dup leg: a
-    * batch doc flags if any seen doc or any smaller-id batch doc sits
-    * within `maxHamming`, so the audit replays identically under any
-    * arrival interleaving. Output: (id, gate_pass, exact_dup,
-    * near_dup, image_dup, audio_dup, admitted), admitted iff all five
-    * clear.
+    * frames have the same shape over the seen corpus.
+    *
+    * The batch fingerprints are left-joined onto the batch by id and
+    * become the [[arrivalFrame]]'s media columns, so the batch is
+    * materialized once, as on the service path. Fingerprint rows whose
+    * id is not in the batch are ignored, and a fingerprint frame that
+    * repeats an id repeats that batch row, which the frame rejects
+    * ([[RepeatedIdException]]). Media legs use the SAME conservative
+    * monotone rule as the text near-dup leg: a batch doc flags if any
+    * seen doc or any smaller-id batch doc sits within `maxHamming`, so
+    * the audit replays identically under any arrival interleaving.
+    * Output: (id, gate_pass, exact_dup, near_dup, image_dup,
+    * audio_dup, admitted), admitted iff all five clear.
     *
     * STALENESS TRIGGER for [[Dedup.ProbeBroadcastKeyedRows]]: that
     * bound (250k) was set by an A/B run with the probe EMBEDDED in
@@ -214,17 +218,35 @@ object Admission {
                              batchImageFp: DataFrame,
                              batchAudioFp: DataFrame,
                              threshold: Double = 0.8,
-                             maxHamming: Int = 7): DataFrame =
-    withMediaFlags(auditWithFps(seen, batch, idCol, textCol, index, fps,
-        threshold), idCol,
-      Dedup.hammingProbeTouch(imageFps, batchImageFp, maxHamming = maxHamming),
-      Dedup.hammingProbeTouch(audioFps, batchAudioFp, maxHamming = maxHamming))
+                             maxHamming: Int = 7): DataFrame = {
+    // batch-bounded fingerprint frames → broadcast; ids cast explicitly
+    // on both sides, as in withMediaFlags
+    val withFps = Seq(ImageFp -> batchImageFp, AudioFp -> batchAudioFp)
+      .foldLeft(batch) { case (df, (name, fp)) =>
+        df.join(broadcast(fp.select(col("id").cast("long").as(s"${name}_id"),
+            col("sh").cast("long").as(name))),
+          col(idCol).cast("long") === col(s"${name}_id"), "left")
+      }
+    val (b, n) = mediaArrivalFrame(withFps, idCol, textCol,
+      Seq(ImageFp -> col(ImageFp), AudioFp -> col(AudioFp)), maxHamming)
+    auditMultimodalArrival(seen, b, n, idCol, textCol, index, fps,
+      imageFps, audioFps, threshold, maxHamming)
+  }
 
-  /** The multimodal audit body over an [[arrivalFrame]] `b` built with
-    * [[mediaColumns]] and its row count `n`: both media probes read
-    * their batch fingerprints from `b` (`n` is the upper bound
-    * [[Dedup.hammingProbeTouchCached]] takes), so no leg adds a
-    * batch-sized cache. */
+  /** [[arrivalFrame]] for the multimodal audits, after the media
+    * probes' geometry is resolved: a rejected `maxHamming` fails here,
+    * before any job runs or any cache is made. */
+  private def mediaArrivalFrame(batch: DataFrame, idCol: String,
+                                textCol: String, media: Seq[(String, Column)],
+                                maxHamming: Int): (DataFrame, Long) = {
+    Dedup.geometry(1, 0, maxHamming, 0)
+    arrivalFrame(batch, idCol, textCol, media)
+  }
+
+  /** The multimodal audit body over a [[mediaArrivalFrame]] `b` and its
+    * row count `n`: both media probes read their batch fingerprints
+    * from `b` (`n` is the upper bound [[Dedup.hammingProbeTouch]]
+    * takes), so no leg adds a batch-sized cache. */
   private def auditMultimodalArrival(seen: DataFrame, b: DataFrame, n: Long,
                                      idCol: String, textCol: String,
                                      index: DataFrame, fps: DataFrame,
@@ -233,9 +255,9 @@ object Admission {
                                      maxHamming: Int): DataFrame =
     withMediaFlags(auditArrival(seen, b, idCol, textCol, index, fps,
         threshold), idCol,
-      Dedup.hammingProbeTouchCached(imageFps, mediaFp(b, idCol, col(ImageFp)), n,
+      Dedup.hammingProbeTouch(imageFps, mediaFp(b, idCol, col(ImageFp)), n,
         maxHamming = maxHamming),
-      Dedup.hammingProbeTouchCached(audioFps, mediaFp(b, idCol, col(AudioFp)), n,
+      Dedup.hammingProbeTouch(audioFps, mediaFp(b, idCol, col(AudioFp)), n,
         maxHamming = maxHamming))
 
   /** The text audit plus the two media flags from the probes' touched
@@ -280,7 +302,7 @@ object Admission {
     val media = mediaColumns(imageCol, audioCol)
     val Seq(imgFps, audFps) = media.map { case (_, kernel) =>
       mediaFp(seen, idCol, kernel) }
-    val (b, n) = arrivalFrame(batch, idCol, textCol, media)
+    val (b, n) = mediaArrivalFrame(batch, idCol, textCol, media, maxHamming)
     auditMultimodalArrival(seen, b, n, idCol, textCol, index,
       seen.select(TextStats.fingerprint(col(textCol)).as("fp")),
       imgFps, audFps, threshold, maxHamming)
@@ -413,8 +435,8 @@ object Admission {
     // so each payload is hashed once per arrival and the fingerprints
     // feed both the audit probes and the store appends from it
     graft.core.Caching.scoped {
-      val (b, n) = arrivalFrame(batch, idCol, textCol,
-        mediaColumns(imageCol, audioCol))
+      val (b, n) = mediaArrivalFrame(batch, idCol, textCol,
+        mediaColumns(imageCol, audioCol), maxHamming)
       auditMultimodalArrival(seen, b, n, idCol, textCol, index, fps,
           imgFps, audFps, threshold, maxHamming)
         .write.mode("overwrite").parquet(s"$auditDir/mb_$batchId")

@@ -231,8 +231,7 @@ object Dedup {
     * [[bandedSignatures]] row for row on unique ids; rows sharing an
     * id are the one divergence, since the batch form's `groupBy(id)`
     * merges their shingle sets into one signature. */
-  private[graft] def bandHashes(sh: Column, bands: Int = 16,
-                                rows: Int = 4): Column =
+  def bandHashes(sh: Column, bands: Int = 16, rows: Int = 4): Column =
     udf { (s: Seq[String]) =>
       if (s == null || s.isEmpty) null
       else bandHashesLocal(s, bands, rows).toSeq
@@ -362,8 +361,9 @@ object Dedup {
     * with any parquet sink; [[minhashProbePairs]] consumes it (from
     * memory or `spark.read.parquet`) to dedup an incoming batch
     * against the existing corpus without touching the corpus texts'
-    * signatures again. bands × rows must match at probe time (the
-    * derived-hash family is deterministic, so index and probe agree
+    * signatures again. The batch's [[bandHashes]] column must use the
+    * same shingle order and bands × rows (the defaults of both agree;
+    * the derived-hash family is deterministic, so index and probe agree
     * bit-for-bit across sessions — LlmSpec pins the parquet
     * round-trip). */
   def minhashBandIndex(df: DataFrame, idCol: String, textCol: String,
@@ -380,6 +380,15 @@ object Dedup {
     * between two corpus docs were reported when they arrived and are
     * never re-emitted).
     *
+    * The batch arrives as ONE materialized `(id: long, sh, bands)`
+    * frame: order-2 shingles ([[shingles]]`(text, 2)`, the index's
+    * default order) and their [[bandHashes]] column in the index's band
+    * geometry. The caller must pass a frame read from a cache: `sh`
+    * feeds both verify sides and `bands` the union and the hot-bucket
+    * broadcast, so a lazy plan would re-run its lineage once per
+    * consumer. The band rows unfold map-side ([[bandRows]]), so the
+    * probe adds no batch-sized cache and no signature shuffle.
+    *
     * What stays cold: every corpus signature (the expensive 64-hash
     * aggregation) comes from the index; corpus texts are re-shingled
     * ONLY for docs that appear in a surviving candidate pair (a
@@ -393,35 +402,12 @@ object Dedup {
     * oversized bucket contributes no pairs — so probe output equals
     * the full-recompute pair set restricted to batch-touching pairs
     * (spec-pinned against the brute-force restriction). */
-  def minhashProbePairs(corpus: DataFrame, newDocs: DataFrame,
+  def minhashProbePairs(corpus: DataFrame, batch: DataFrame,
                         idCol: String, textCol: String, index: DataFrame,
-                        threshold: Double, shingleN: Int = 2,
-                        bands: Int = 16, rows: Int = 4,
+                        threshold: Double,
                         maxBucketSize: Int = 500): DataFrame = {
-    // cached: read by the banding once and both verify sides
-    val newSh = graft.core.Caching.eager(
-      newDocs.select(col(idCol).cast("long").as("id"),
-        shingles(col(textCol), shingleN).as("sh")))
-    minhashProbePairsFromSh(corpus, newSh,
-      bandedSignatures(newSh, bands, rows), idCol, textCol, index,
-      threshold, shingleN, maxBucketSize)
-  }
-
-  /** [[minhashProbePairs]] over the batch's ALREADY-MATERIALIZED
-    * `(id: long, sh: array<string>)` shingle table and its
-    * `(id, band, band_hash)` rows — the caller must pass frames read
-    * from a cache (`newSh` feeds both verify sides, `newBanded` the
-    * union and the hot-bucket broadcast; a lazy plan would re-run its
-    * lineage once per consumer). Exists so a caller that already
-    * caches a batch-sized frame carrying the shingles and their
-    * [[bandHashes]] (the admission arrival frame) pays ONE batch
-    * materialization barrier and no signature shuffle. `newBanded`
-    * must use the index's band geometry. */
-  private[graft] def minhashProbePairsFromSh(corpus: DataFrame,
-                        newSh: DataFrame, newBanded: DataFrame,
-                        idCol: String, textCol: String, index: DataFrame,
-                        threshold: Double, shingleN: Int = 2,
-                        maxBucketSize: Int = 500): DataFrame = {
+    val newSh = batch.select(col("id"), col("sh"))
+    val newBanded = bandRows(batch, "id", "bands")
     val unioned = index
       .select(col("id").cast("long").as("id"), col("band"), col("band_hash"))
       .withColumn("is_new", lit(false))
@@ -472,7 +458,7 @@ object Dedup {
       .join(broadcast(oldIds.select(col("id").as("__cand_id"))),
         col(idCol).cast("long") === col("__cand_id"), "left_semi")
       .select(col(idCol).cast("long").as("id"),
-        shingles(col(textCol), shingleN).as("sh")))
+        shingles(col(textCol), 2).as("sh")))
     val allSh = newSh.unionByName(oldSh)
     cand
       .join(allSh.as("sa"), col("id_a") === col("sa.id"))
@@ -520,12 +506,10 @@ object Dedup {
     * simhash expression evaluates once, not per join side. */
   def simhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         bands: Int = 8, maxHamming: Int = 7): DataFrame = {
-    // geometry is checked before the fingerprints are cached, so a bad
-    // argument runs no job and leaves no cache behind
-    simhashGeometry(bands, maxHamming)
-    val fp = graft.core.Caching.eager(df.select(col(idCol).as("id"),
-        simhash64(TextStats.tokens(col(textCol))).as("sh")))
-    simhashCandidatesFromFp(fp, bands, maxHamming)
+    checkSimhashBands(bands)
+    cachedHammingCandidates(df.select(col(idCol).as("id"),
+        simhash64(TextStats.tokens(col(textCol))).as("sh")),
+      bands, maxHamming, keyBlocks = 1)
   }
 
   /** [[simhashCandidates]] over ALREADY-COMPUTED `(id, sh)`
@@ -537,14 +521,28 @@ object Dedup {
     * cached frame) fingerprints the corpus exactly once. */
   def simhashCandidatesFromFp(fp: DataFrame, bands: Int = 8,
                               maxHamming: Int = 7): DataFrame = {
-    simhashGeometry(bands, maxHamming)
+    checkSimhashBands(bands)
     hammingCandidatesFromFp(fp, bands, maxHamming, keyBlocks = 1)
   }
 
-  /** The classic scheme's checks: equal bands and one key block. */
-  private def simhashGeometry(bands: Int, maxHamming: Int): Unit = {
+  /** The classic scheme's own check: equal bands. The banding resolves
+    * the rest of the geometry, with one key block. */
+  private def checkSimhashBands(bands: Int): Unit =
     require(bands > 0 && 64 % bands == 0, s"bands must divide 64, got $bands")
-    geometry(1, bands, maxHamming, keyBlocks = 1)
+
+  /** [[hammingCandidatesFromFp]] over a LAZY `(id, words…)` fingerprint
+    * frame — the shape of every pair entry point that fingerprints its
+    * own input. The geometry is resolved for the frame's word count
+    * (read from its schema, no job) BEFORE the frame is cached, so a
+    * bad argument runs no job and leaves no cache behind; the frame is
+    * then cached once, since the banding counts it and reads it on
+    * both join sides. */
+  private[llm] def cachedHammingCandidates(fp: DataFrame, blocks: Int,
+                                           maxHamming: Int, keyBlocks: Int,
+                                           maxBucketSize: Int = 0): DataFrame = {
+    geometry(fp.columns.count(_ != "id"), blocks, maxHamming, keyBlocks)
+    hammingCandidatesFromFp(graft.core.Caching.eager(fp), blocks,
+      maxHamming, keyBlocks, maxBucketSize)
   }
 
   /** Banding geometry `(blocks, keyBlocks)` sized from the Hamming
@@ -966,7 +964,7 @@ object Dedup {
 
   /** MEMBERSHIP probe for the admission service's media stores: the
     * batch ids having ANY Hamming-≤`maxHamming` partner in `storeFp`
-    * or among SMALLER-ID rows of `batchFp` (q98's conservative
+    * or among SMALLER-ID rows of `bf` (q98's conservative
     * monotone rule, per modality). Both inputs are one-word `(id, sh)`
     * fingerprints with non-null sh (non-decodable media never flags —
     * drop nulls before calling); the geometry comes from the shared
@@ -1006,47 +1004,29 @@ object Dedup {
     * Both paths are exact (spec-pinned equal); the brute path's only
     * join is a one-row broadcast (condition-free, never a shuffle).
     *
-    * Cache contract: the batch frame is `Caching.eager`-cached (it
-    * feeds both legs on either path). A long-running caller must
-    * invoke this inside a `Caching.scoped` block spanning the
-    * consuming action — the admission service entry points do — or
-    * clearCache afterwards; otherwise each call leaks one batch-sized
-    * MEMORY_AND_DISK block. A caller that already holds the batch
-    * fingerprints in a cache calls [[hammingProbeTouchCached]]
-    * instead, which adds no cache on the brute path.
+    * Cache contract: `bf` must read from the caller's cache, e.g. a
+    * projection and null filter of a cached arrival frame. It feeds
+    * both legs on either path and is not cached again here, so the
+    * brute path adds no cache. The banding path caches its keyed batch
+    * rows: a long-running caller must invoke this inside a
+    * `Caching.scoped` block spanning the consuming action — the
+    * admission service entry points do — or clearCache afterwards;
+    * otherwise each call leaks one MEMORY_AND_DISK block.
     *
-    * Geometry: [[geometry]], auto-sized at `blocks = keyBlocks = 0`
-    * — (9, 2) at the default maxHamming=7. */
-  def hammingProbeTouch(storeFp: DataFrame, batchFp: DataFrame,
-                        blocks: Int = 0, maxHamming: Int = 7,
-                        keyBlocks: Int = 0,
-                        bruteBelow: Long = 2048): DataFrame = {
-    // geometry is checked before the batch is cached, so a bad
-    // argument leaves no cache behind
-    geometry(1, blocks, maxHamming, keyBlocks)
-    val (bf, nBatch) = graft.core.Caching.eagerCounted(
-      batchFp.select(col("id"), col("sh")))
-    hammingProbeTouchCached(storeFp, bf, nBatch, blocks, maxHamming,
-      keyBlocks, bruteBelow)
-  }
-
-  /** [[hammingProbeTouch]] over a batch fingerprint frame `bf` (`id`,
-    * `sh`, non-null sh) that the caller reads from its OWN cache, e.g.
-    * a projection and null filter of a cached arrival frame.
-    *
-    * Cache contract: `bf` must read from a cache, since it feeds both
-    * legs and is not cached again here; the banding path still caches
-    * its keyed batch rows, so the `Caching.scoped` rule above applies.
     * `nBatch` is an UPPER BOUND on `bf`'s row count, such as the row
     * count of the cached frame before the null filter. It steers only
     * the size dispatch (brute path at or under `bruteBelow`) and the
     * broadcast bound of the banding joins, both exact either way; an
     * overestimate can only pick the banding path or a merge join
     * where the true count would not. A `bf` with zero rows returns no
-    * ids on either path. */
-  private[graft] def hammingProbeTouchCached(storeFp: DataFrame,
-      bf: DataFrame, nBatch: Long, blocks: Int = 0, maxHamming: Int = 7,
-      keyBlocks: Int = 0, bruteBelow: Long = 2048): DataFrame = {
+    * ids on either path.
+    *
+    * Geometry: [[geometry]], auto-sized at `blocks = keyBlocks = 0`
+    * — (9, 2) at the default maxHamming=7. */
+  def hammingProbeTouch(storeFp: DataFrame, bf: DataFrame, nBatch: Long,
+                        blocks: Int = 0, maxHamming: Int = 7,
+                        keyBlocks: Int = 0,
+                        bruteBelow: Long = 2048): DataFrame = {
     val (b, kb, nCombos) = geometry(1, blocks, maxHamming, keyBlocks)
     if (nBatch == 0L)
       return bf.select(col("id")).limit(0)

@@ -351,14 +351,10 @@ object Multimodal {
                         payloadCol: String, blocks: Int = 0,
                         maxHamming: Int = 7, keyBlocks: Int = 0,
                         maxBucketSize: Int = 0): DataFrame = {
-    // geometry is checked before the fingerprints are cached, so a
-    // bad argument runs no job and leaves no cache behind
-    Dedup.geometry(1, blocks, maxHamming, keyBlocks)
-    val fp = graft.core.Caching.eager(media.select(
+    Dedup.cachedHammingCandidates(media.select(
         col(idCol).cast("long").as("id"),
         graft.functions.PerceptualHash.d_hash(col(payloadCol)).as("sh"))
-      .where(col("sh").isNotNull))
-    Dedup.hammingCandidatesFromFp(fp, blocks, maxHamming, keyBlocks,
+      .where(col("sh").isNotNull), blocks, maxHamming, keyBlocks,
       maxBucketSize)
   }
 
@@ -385,14 +381,12 @@ object Multimodal {
                             payloadCol: String, blocks: Int = 0,
                             maxHamming: Int = 8, keyBlocks: Int = 0,
                             maxBucketSize: Int = 0): DataFrame = {
-    Dedup.geometry(2, blocks, maxHamming, keyBlocks)
-    val fp = graft.core.Caching.eager(media.select(
+    Dedup.cachedHammingCandidates(media.select(
         col(idCol).cast("long").as("id"),
         graft.functions.PerceptualHash.d_a_hash(col(payloadCol)).as("h"))
       .where(col("h").isNotNull)
-      .select(col("id"), col("h.dh").as("lo"), col("h.ah").as("hi")))
-    Dedup.hammingCandidatesFromFp(fp, blocks, maxHamming, keyBlocks,
-      maxBucketSize)
+      .select(col("id"), col("h.dh").as("lo"), col("h.ah").as("hi")),
+      blocks, maxHamming, keyBlocks, maxBucketSize)
   }
 
   /** Per-sample value of doc `id`'s synthetic PCM stream — the audio
@@ -507,12 +501,10 @@ object Multimodal {
                         payloadCol: String, blocks: Int = 0,
                         maxHamming: Int = 7, keyBlocks: Int = 0,
                         maxBucketSize: Int = 0): DataFrame = {
-    Dedup.geometry(1, blocks, maxHamming, keyBlocks)
-    val fp = graft.core.Caching.eager(media.select(
+    Dedup.cachedHammingCandidates(media.select(
         col(idCol).cast("long").as("id"),
         graft.functions.AudioFingerprint.audio_fp(col(payloadCol)).as("sh"))
-      .where(col("sh").isNotNull))
-    Dedup.hammingCandidatesFromFp(fp, blocks, maxHamming, keyBlocks,
+      .where(col("sh").isNotNull), blocks, maxHamming, keyBlocks,
       maxBucketSize)
   }
 
@@ -541,15 +533,13 @@ object Multimodal {
                             payloadCol: String, blocks: Int = 0,
                             maxHamming: Int = 7, keyBlocks: Int = 0,
                             maxBucketSize: Int = 0): DataFrame = {
-    Dedup.geometry(2, blocks, maxHamming, keyBlocks)
-    val fp = graft.core.Caching.eager(media.select(
+    Dedup.cachedHammingCandidates(media.select(
         col(idCol).cast("long").as("id"),
         graft.functions.AudioFingerprint.audio_fp_wide(col(payloadCol))
           .as("h"))
       .where(col("h").isNotNull)
-      .select(col("id"), col("h.lo").as("lo"), col("h.hi").as("hi")))
-    Dedup.hammingCandidatesFromFp(fp, blocks, maxHamming, keyBlocks,
-      maxBucketSize)
+      .select(col("id"), col("h.lo").as("lo"), col("h.hi").as("hi")),
+      blocks, maxHamming, keyBlocks, maxBucketSize)
   }
 
   /** STUB feature hash: stands in for an embedding/perceptual hash. */

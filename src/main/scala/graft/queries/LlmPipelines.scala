@@ -3,6 +3,7 @@ package graft.queries
 import graft.QueryDef
 import graft.core.Tables
 import graft.llm.{Dedup, Similarity, TextStats}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** LLM-training-data pipeline operators (BASELINE.json north star)
@@ -2501,14 +2502,20 @@ object LlmPipelines {
       val batch = d.where(col("doc_id") % 10 === 7)
       val corpus = d.where(col("doc_id") % 10 =!= 7)
       val index = Dedup.minhashBandIndex(corpus, "doc_id", "text")
-      val pairs = Dedup.minhashProbePairs(corpus, batch, "doc_id", "text",
+      // the batch's one materialization: shingles and their band
+      // hashes, the probe's (id, sh, bands) frame
+      val newDocs = graft.core.Caching.eager(batch.select(
+          col("doc_id").cast("long").as("id"),
+          Dedup.shingles(col("text"), 2).as("sh"))
+        .withColumn("bands", Dedup.bandHashes(col("sh"))))
+      val pairs = Dedup.minhashProbePairs(corpus, newDocs, "doc_id", "text",
         index, threshold = 0.8)
       // pair → per-batch-doc expansion (membership is arithmetic here:
       // new iff doc_id % 10 = 7, so no flag needs carrying). BOTH
       // directions from ONE pass over `pairs` (explode of the two
       // orientations), not a two-leg union — `pairs` is an uncached
       // verify-join subtree, and the union form re-ran it per leg
-      // (r17; same rewrite in Admission.auditWithFps)
+      // (r17; Admission.auditArrival uses the same rewrite)
       val touches = pairs
         .select(explode(array(
           struct(col("id_a").as("d"), col("id_b").as("o")),
@@ -3306,46 +3313,9 @@ object LlmPipelines {
     * bit tables restricted by the monotone rule. */
   val q103 = QueryDef(
     "q103_multimodal_admission",
-    (s, dir) => {
-      // FINGERPRINT-FIRST (r17): the pre-r17 form joined both payload
-      // tables onto the documents (`full = d ⋈ imgs ⋈ wavs`) and ran
-      // the audit over that — but the media tables are keyed by the
-      // SAME doc_id they were generated from (a 1:1 inner join, so the
-      // row set is identical), and every leg of the audit that read
-      // `full` (gate, fingerprint store, band index, probe shingles,
-      // and all four media-fingerprint frames) re-ran BOTH payload
-      // generators plus the two joins — the generators executed ~9×
-      // per run. Here the text legs read the bare documents scan and
-      // each modality's (id, sh) fingerprint frame is computed
-      // DIRECTLY from its synthetic payload table, so each generator
-      // runs exactly twice (seen + batch) and no payload ever crosses
-      // a join — the guide-§8 "move decisions to lightweight proxies"
-      // shape, output-identical (same oracle, hash-gated).
-      val d = Tables.documents(s, dir)
-      val batch = d.select(col("doc_id"), col("text"))
-        .where(col("doc_id") % 10 === 7)
-      val corpus = d.select(col("doc_id"), col("text"))
-        .where(col("doc_id") % 10 =!= 7)
-      val index = Dedup.minhashBandIndex(corpus, "doc_id", "text")
-      def imgFp(ids: org.apache.spark.sql.DataFrame) =
-        graft.llm.Multimodal.syntheticImageTable(ids, "doc_id")
-          .select(col("media_id").cast("long").as("id"),
-            graft.functions.PerceptualHash.d_hash(col("payload")).as("sh"))
-          .where(col("sh").isNotNull)
-      def audFp(ids: org.apache.spark.sql.DataFrame) =
-        graft.llm.Multimodal.syntheticAudioTable(ids, "doc_id")
-          .select(col("media_id").cast("long").as("id"),
-            graft.functions.AudioFingerprint.audio_fp(col("payload")).as("sh"))
-          .where(col("sh").isNotNull)
-      graft.llm.Admission.auditMultimodalWithFps(corpus, batch, "doc_id",
-          "text", index,
-          corpus.select(graft.llm.TextStats.fingerprint(col("text")).as("fp")),
-          imgFp(corpus.select(col("doc_id"))),
-          audFp(corpus.select(col("doc_id"))),
-          imgFp(batch.select(col("doc_id"))),
-          audFp(batch.select(col("doc_id"))))
-        .orderBy(col("doc_id"))
-    },
+    (s, dir) => multimodalAdmission(s, dir,
+      graft.llm.Multimodal.syntheticImageTable,
+      graft.llm.Multimodal.syntheticAudioTable),
     Some(q103Oracle))
 
   /** q103 on the DISCRIMINATING sparse media fixture (round-13 verdict
@@ -3361,34 +3331,9 @@ object LlmPipelines {
     * per-sample kernels ([[q80GraySparse]] / [[q84SampleSparse]]). */
   val q104 = QueryDef(
     "q104_multimodal_admission_sparse",
-    (s, dir) => {
-      // fingerprint-first, q103's r17 rewrite verbatim (see there) on
-      // the sparse payload kernels
-      val d = Tables.documents(s, dir)
-      val batch = d.select(col("doc_id"), col("text"))
-        .where(col("doc_id") % 10 === 7)
-      val corpus = d.select(col("doc_id"), col("text"))
-        .where(col("doc_id") % 10 =!= 7)
-      val index = Dedup.minhashBandIndex(corpus, "doc_id", "text")
-      def imgFp(ids: org.apache.spark.sql.DataFrame) =
-        graft.llm.Multimodal.syntheticImageTableSparse(ids, "doc_id")
-          .select(col("media_id").cast("long").as("id"),
-            graft.functions.PerceptualHash.d_hash(col("payload")).as("sh"))
-          .where(col("sh").isNotNull)
-      def audFp(ids: org.apache.spark.sql.DataFrame) =
-        graft.llm.Multimodal.syntheticAudioTableSparse(ids, "doc_id")
-          .select(col("media_id").cast("long").as("id"),
-            graft.functions.AudioFingerprint.audio_fp(col("payload")).as("sh"))
-          .where(col("sh").isNotNull)
-      graft.llm.Admission.auditMultimodalWithFps(corpus, batch, "doc_id",
-          "text", index,
-          corpus.select(graft.llm.TextStats.fingerprint(col("text")).as("fp")),
-          imgFp(corpus.select(col("doc_id"))),
-          audFp(corpus.select(col("doc_id"))),
-          imgFp(batch.select(col("doc_id"))),
-          audFp(batch.select(col("doc_id"))))
-        .orderBy(col("doc_id"))
-    },
+    (s, dir) => multimodalAdmission(s, dir,
+      graft.llm.Multimodal.syntheticImageTableSparse,
+      graft.llm.Multimodal.syntheticAudioTableSparse),
     Some(multimodalAdmissionOracle(
       q80GraySparse(_, _), q84SampleSparse(_))))
 
@@ -3452,6 +3397,52 @@ object LlmPipelines {
     * dHash and q84 energy-gradient bit tables ([[q80Gray]] /
     * [[q84Sample]]) joined all-pairs at Hamming <= 7 and restricted by
     * the same monotone rule as the text near-dup CTE. */
+  /** q103/q104's audit: every 10th document arrives as the batch, and
+    * each modality's `(id, sh)` fingerprints come straight from its
+    * synthetic payload table (`imageTable` / `audioTable`), per side. */
+  private def multimodalAdmission(s: SparkSession, dir: String,
+      imageTable: (DataFrame, String) => DataFrame,
+      audioTable: (DataFrame, String) => DataFrame): DataFrame = {
+    val d = Tables.documents(s, dir)
+    val batch = d.select(col("doc_id"), col("text"))
+      .where(col("doc_id") % 10 === 7)
+    val corpus = d.select(col("doc_id"), col("text"))
+      .where(col("doc_id") % 10 =!= 7)
+    val index = Dedup.minhashBandIndex(corpus, "doc_id", "text")
+    // FINGERPRINT-FIRST (r17): the pre-r17 form joined both payload
+    // tables onto the documents (`full = d ⋈ imgs ⋈ wavs`) and ran
+    // the audit over that — but the media tables are keyed by the
+    // SAME doc_id they were generated from (a 1:1 inner join, so the
+    // row set is identical), and every leg of the audit that read
+    // `full` (gate, fingerprint store, band index, probe shingles,
+    // and all four media-fingerprint frames) re-ran BOTH payload
+    // generators plus the two joins — the generators executed ~9×
+    // per run. Here the text legs read the bare documents scan and
+    // each modality's (id, sh) fingerprint frame is computed
+    // DIRECTLY from its synthetic payload table, so each generator
+    // runs exactly twice (seen + batch) and no payload ever crosses
+    // a join — the guide-§8 "move decisions to lightweight proxies"
+    // shape, output-identical (same oracle, hash-gated).
+    def imgFp(ids: DataFrame) =
+      imageTable(ids, "doc_id")
+        .select(col("media_id").cast("long").as("id"),
+          graft.functions.PerceptualHash.d_hash(col("payload")).as("sh"))
+        .where(col("sh").isNotNull)
+    def audFp(ids: DataFrame) =
+      audioTable(ids, "doc_id")
+        .select(col("media_id").cast("long").as("id"),
+          graft.functions.AudioFingerprint.audio_fp(col("payload")).as("sh"))
+        .where(col("sh").isNotNull)
+    graft.llm.Admission.auditMultimodalWithFps(corpus, batch, "doc_id",
+        "text", index,
+        corpus.select(graft.llm.TextStats.fingerprint(col("text")).as("fp")),
+        imgFp(corpus.select(col("doc_id"))),
+        audFp(corpus.select(col("doc_id"))),
+        imgFp(batch.select(col("doc_id"))),
+        audFp(batch.select(col("doc_id"))))
+      .orderBy(col("doc_id"))
+  }
+
   private def q103Oracle: String = multimodalAdmissionOracle(
     q80Gray(_, _), q84Sample(_))
 

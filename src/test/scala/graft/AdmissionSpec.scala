@@ -5,16 +5,19 @@ import java.nio.file.{Files, Path}
 import graft.core.Tables
 import graft.llm.{Admission, Dedup, Multimodal, TextStats}
 import org.apache.spark.GraftTestBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerEvent, SparkListenerStageSubmitted}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.columnar.CachedBatch
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The admission service's per-arrival structure (one batch
-  * materialization, a fixed number of SQL executions), its band-index
-  * appends against the batch banding, its repeated-id rejection, and
-  * `compactStore` under a file system whose final rename fails. */
+  * materialization, a fixed number of SQL executions), the one-shot
+  * audit's single batch cache, the media geometry check before any
+  * job, its band-index appends against the batch banding, its
+  * repeated-id rejection, and `compactStore` under a file system whose
+  * final rename fails. */
 class AdmissionSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -129,6 +132,88 @@ class AdmissionSpec extends AnyFunSuite {
       // appends (five multimodal, three text-only)
       assert(mmExecs == 9, s"multimodal arrival ran $mmExecs SQL executions")
       assert(txExecs == 7, s"text-only arrival ran $txExecs SQL executions")
+    }
+  }
+
+  /** q103's fingerprint frames: `(id, sh)` from one modality's
+    * synthetic payload table over `ids`, null fingerprints dropped. */
+  private def q103Fp(ids: DataFrame, table: (DataFrame, String) => DataFrame,
+                     kernel: Column => Column): DataFrame =
+    table(ids.select($"doc_id"), "doc_id")
+      .select($"media_id".cast("long").as("id"), kernel($"payload").as("sh"))
+      .where($"sh".isNotNull)
+
+  private def imageFp(ids: DataFrame) = q103Fp(ids,
+    Multimodal.syntheticImageTable, graft.functions.PerceptualHash.d_hash)
+  private def audioFp(ids: DataFrame) = q103Fp(ids,
+    Multimodal.syntheticAudioTable, graft.functions.AudioFingerprint.audio_fp)
+
+  test("a one-shot audit with caller fingerprints caches one batch-sized frame") {
+    // q103's shape: text legs over the documents, each modality's
+    // fingerprints computed from its payload table, per side
+    val d = docs.select($"doc_id", $"text")
+    val batch = d.where($"doc_id" % 10 === 7)
+    val corpus = d.where($"doc_id" % 10 =!= 7)
+    val nBatch = batch.count()
+    spark.catalog.clearCache()
+    val (_, cached) = observe {
+      Admission.auditMultimodalWithFps(corpus, batch, "doc_id", "text",
+          Dedup.minhashBandIndex(corpus, "doc_id", "text"),
+          corpus.select(TextStats.fingerprint($"text").as("fp")),
+          imageFp(corpus), audioFp(corpus), imageFp(batch), audioFp(batch))
+        .collect()
+    }
+    // rows per cache the call materialized
+    val rows = cached.keys.toSeq.map { id =>
+      spark.sparkContext.getPersistentRDDs(id)
+        .asInstanceOf[org.apache.spark.rdd.RDD[CachedBatch]]
+        .map(_.numRows.toLong).sum().toLong
+    }
+    spark.catalog.clearCache()
+    assert(nBatch > 0 && rows.count(_ == nBatch) == 1,
+      s"caches holding $nBatch batch rows: rows per cache = $rows")
+  }
+
+  test("multimodal audits reject a bad media geometry before any job or cache") {
+    val full = withMedia(docs)
+    val corpus = full.where($"doc_id" % 10 =!= 7)
+    val batch = full.where($"doc_id" % 10 === 7)
+    val sc = spark.sparkContext
+    withTempDir("graft_adm_geometry") { root =>
+      val mm = seed(root, corpus, media = true)
+      val index = Dedup.minhashBandIndex(corpus, "doc_id", "text")
+      val fps = corpus.select(TextStats.fingerprint($"text").as("fp"))
+      // h = 13 fits no one-word geometry under the combination cap
+      val calls = Seq[(String, () => Any)](
+        "auditMultimodal" -> (() => Admission.auditMultimodal(corpus, batch,
+          "doc_id", "text", "img", "wav", index, maxHamming = 13)),
+        "auditMultimodalWithFps" -> (() => Admission.auditMultimodalWithFps(
+          corpus, batch, "doc_id", "text", index, fps, imageFp(corpus),
+          audioFp(corpus), imageFp(batch), audioFp(batch), maxHamming = 13)),
+        "processMultimodalMicroBatch" -> (() =>
+          Admission.processMultimodalMicroBatch(batch, 0L, "doc_id", "text",
+            "img", "wav", mm("seen"), mm("index"), mm("fps"), mm("imgfp"),
+            mm("audfp"), mm("audit"), maxHamming = 13)))
+      val faults = calls.flatMap { case (name, call) =>
+        spark.catalog.clearCache()
+        GraftTestBridge.drain(sc)
+        val jobs = new java.util.concurrent.atomic.AtomicInteger
+        val l = new SparkListener {
+          override def onJobStart(e: SparkListenerJobStart): Unit =
+            jobs.incrementAndGet()
+        }
+        sc.addSparkListener(l)
+        try {
+          intercept[IllegalArgumentException] { call() }
+          GraftTestBridge.drain(sc)
+        } finally sc.removeSparkListener(l)
+        Seq(s"$name ran ${jobs.get} job(s)" -> (jobs.get != 0),
+          s"$name left a cached block" ->
+            !spark.sharedState.cacheManager.isEmpty)
+          .collect { case (fault, true) => fault }
+      }
+      spark.catalog.clearCache()
+      assert(faults.isEmpty, faults.mkString("; "))
     }
   }
 

@@ -154,19 +154,23 @@ class LlmSpec extends AnyFunSuite {
       "fixture should ALSO hold corpus-only pairs the probe must NOT emit")
 
     val index = Dedup.minhashBandIndex(corpus, "doc_id", "text")
-    def probeWith(idx: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      Dedup.minhashProbePairs(corpus, batch, "doc_id", "text", idx,
-          threshold = 0.8)
-        .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-    val got = probeWith(index)
-    assert(got == expect,
-      s"missed=${(expect -- got).take(3)} extra=${(got -- expect).take(3)}")
-
-    // the index is an ARTIFACT: write, reload in a fresh frame, probe
-    // again — bit-identical banding across the round-trip is what lets
-    // a growing corpus keep its signatures cold
     val dir = java.nio.file.Files.createTempDirectory("graft_lsh_index")
-    try {
+    try graft.core.Caching.scoped {
+      // the probe's batch frame: one cache of (id, sh, bands)
+      val newDocs = graft.core.Caching.eager(batch.select(
+          $"doc_id".cast("long").as("id"), Dedup.shingles($"text", 2).as("sh"))
+        .withColumn("bands", Dedup.bandHashes($"sh")))
+      def probeWith(idx: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+        Dedup.minhashProbePairs(corpus, newDocs, "doc_id", "text", idx,
+            threshold = 0.8)
+          .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
+      val got = probeWith(index)
+      assert(got == expect,
+        s"missed=${(expect -- got).take(3)} extra=${(got -- expect).take(3)}")
+
+      // the index is an ARTIFACT: write, reload in a fresh frame, probe
+      // again — bit-identical banding across the round-trip is what lets
+      // a growing corpus keep its signatures cold
       index.write.mode("overwrite").parquet(dir.toString)
       val reloaded = spark.read.parquet(dir.toString)
       assert(probeWith(reloaded) == expect,
@@ -681,40 +685,56 @@ class LlmSpec extends AnyFunSuite {
     // store/batch by id parity, so cross-group AND intra-batch pairs
     // both exist (the doc fixture's near-dup families span parities).
     val fps = docs
-      .select($"doc_id", graft.functions.SimHash64.simhash64(
+      .select($"doc_id".as("id"), graft.functions.SimHash64.simhash64(
         graft.llm.TextStats.tokens($"text")).as("sh"))
-      .as[(Long, Long)].collect()
+    val store = fps.where($"id" % 2 === 0)
+    // the probe's input the way the admission arrival frame hands it
+    // over: a null-filtered projection of a cached frame, with the
+    // frame's row count as the upper bound. Every third batch doc has
+    // no fingerprint (undecodable media).
+    val batch = fps.where($"id" % 2 === 1)
+      .withColumn("sh", when($"id" % 3 === 0, lit(null)).otherwise($"sh"))
+    val allNull = batch.withColumn("sh", lit(null).cast("long"))
     val maxHamming = 7
-    val store = fps.filter(_._1 % 2 == 0)
-    val batch = fps.filter(_._1 % 2 == 1)
-    val exact = batch.filter { case (id, sh) =>
-      store.exists(s => java.lang.Long.bitCount(s._2 ^ sh) <= maxHamming) ||
-      batch.exists(b => b._1 < id &&
+    val storeRows = store.as[(Long, Long)].collect()
+    val batchRows = batch.where($"sh".isNotNull).as[(Long, Long)].collect()
+    val exact = batchRows.filter { case (id, sh) =>
+      storeRows.exists(s => java.lang.Long.bitCount(s._2 ^ sh) <= maxHamming) ||
+      batchRows.exists(b => b._1 < id &&
         java.lang.Long.bitCount(b._2 ^ sh) <= maxHamming)
     }.map(_._1).toSet
     assert(exact.nonEmpty, "fixture should contain touched batch ids")
+    // and batch ids far from everything are NOT touched
+    assert((batchRows.map(_._1).toSet -- exact).nonEmpty,
+      "fixture should also contain untouched batch ids")
     // BOTH dispatch paths must equal the ground truth: the codegen
     // popcount kernel (small batch, default) and the banding probe
     // (bruteBelow = 0 forces the large-batch shape)
     for (bruteBelow <- Seq(Long.MaxValue, 0L)) {
-      val got = graft.core.Caching.scoped {
-        Dedup.hammingProbeTouch(
-            store.toSeq.toDF("id", "sh"), batch.toSeq.toDF("id", "sh"),
-            maxHamming = maxHamming, bruteBelow = bruteBelow)
+      graft.core.Caching.scoped {
+        val (cached, n) = graft.core.Caching.eagerCounted(batch)
+        assert(n > batchRows.length, "the row count is an upper bound here")
+        val got = Dedup.hammingProbeTouch(store,
+            cached.where($"sh".isNotNull), n, maxHamming = maxHamming,
+            bruteBelow = bruteBelow)
           .as[Long].collect().toSet
+        assert(got == exact, s"bruteBelow=$bruteBelow: " +
+          s"missed=${(exact -- got).take(5)} extra=${(got -- exact).take(5)}")
+        // count > 0 but zero fingerprint rows: no ids on either path
+        val (nulls, nNull) = graft.core.Caching.eagerCounted(allNull)
+        assert(nNull > 0)
+        assert(Dedup.hammingProbeTouch(store,
+            nulls.where($"sh".isNotNull), nNull, bruteBelow = bruteBelow)
+          .count() == 0, s"bruteBelow=$bruteBelow: all-null batch touched")
       }
-      assert(got == exact, s"bruteBelow=$bruteBelow: " +
-        s"missed=${(exact -- got).take(5)} extra=${(got -- exact).take(5)}")
     }
-    // and batch ids far from everything are NOT touched
-    assert((batch.map(_._1).toSet -- exact).nonEmpty,
-      "fixture should also contain untouched batch ids")
   }
 
   test("hammingProbeTouchCached over a caller-cached frame equals the self-caching probe") {
-    // the admission arrival frame hands the probe a null-filtered
-    // projection of its own cache plus the frame's row count, an
-    // upper bound on the fingerprint rows
+    // the probe over the arrival frame's shape (a null-filtered
+    // projection of a wider cache, its row count an upper bound) must
+    // equal the probe over a batch cached on its own with the exact
+    // fingerprint count, on both dispatch paths
     val fps = docs
       .select($"doc_id".as("id"), graft.functions.SimHash64.simhash64(
         graft.llm.TextStats.tokens($"text")).as("sh"))
@@ -722,25 +742,21 @@ class LlmSpec extends AnyFunSuite {
     // every third batch doc has no fingerprint (undecodable media)
     val batch = fps.where($"id" % 2 === 1)
       .withColumn("sh", when($"id" % 3 === 0, lit(null)).otherwise($"sh"))
-    val allNull = batch.withColumn("sh", lit(null).cast("long"))
     for (bruteBelow <- Seq(2048L, 0L)) {
       graft.core.Caching.scoped {
-        val want = Dedup.hammingProbeTouch(store,
-            batch.where($"sh".isNotNull), bruteBelow = bruteBelow)
+        val (own, nOwn) = graft.core.Caching.eagerCounted(
+          batch.where($"sh".isNotNull))
+        val want = Dedup.hammingProbeTouch(store, own, nOwn,
+            bruteBelow = bruteBelow)
           .as[Long].collect().toSet
         assert(want.nonEmpty, "fixture should contain touched batch ids")
         val (cached, n) = graft.core.Caching.eagerCounted(batch)
-        val got = Dedup.hammingProbeTouchCached(store,
+        assert(n > nOwn, "the row count is an upper bound here")
+        val got = Dedup.hammingProbeTouch(store,
             cached.where($"sh".isNotNull), n, bruteBelow = bruteBelow)
           .as[Long].collect().toSet
         assert(got == want, s"bruteBelow=$bruteBelow: " +
           s"missed=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
-        // count > 0 but zero fingerprint rows: no ids on either path
-        val (nulls, nNull) = graft.core.Caching.eagerCounted(allNull)
-        assert(nNull > 0)
-        assert(Dedup.hammingProbeTouchCached(store,
-            nulls.where($"sh".isNotNull), nNull, bruteBelow = bruteBelow)
-          .count() == 0, s"bruteBelow=$bruteBelow: all-null batch touched")
       }
     }
   }
@@ -758,12 +774,11 @@ class LlmSpec extends AnyFunSuite {
     // the PROBE shares the ComboCap guard (r16 advice): a pathological
     // explicit geometry — C(40,20) ≈ 1.4e11 combinations — must fail
     // loudly BEFORE any combination enumeration (which would hang the
-    // driver) or Int-overflowing .size; the guard runs even before the
-    // batch count, so empty frames suffice
+    // driver) or Int-overflowing .size; the guard runs before either
+    // frame is read, so any frames suffice
+    val zeros = docs.select($"doc_id".as("id"), lit(0L).as("sh"))
     val capErr = intercept[IllegalArgumentException] {
-      Dedup.hammingProbeTouch(
-        docs.select($"doc_id".as("id"), lit(0L).as("sh")),
-        docs.select($"doc_id".as("id"), lit(0L).as("sh")),
+      Dedup.hammingProbeTouch(zeros, zeros, nBatch = 1L,
         blocks = 40, maxHamming = 7, keyBlocks = 20)
     }
     assert(capErr.getMessage.contains("combination keys"),

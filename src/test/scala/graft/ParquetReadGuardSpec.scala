@@ -18,7 +18,9 @@ import scala.jdk.CollectionConverters._
   *
   * The citation guard keeps comments from naming dev tools that no
   * longer exist: a measurement is cited by its SCALE.md section, and a
-  * tool is cited only while its file is in the tree.
+  * tool is cited only while its file is in the tree. It also keeps the
+  * main tree's scaladoc links (`[[Name]]`, `[[a.b.Name]]`) pointing at
+  * names the tree still defines.
   */
 class ParquetReadGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
@@ -67,8 +69,14 @@ class ParquetReadGuardSpec extends AnyFunSuite {
       .map(f => f -> new String(Files.readAllBytes(f), "UTF-8"))
     val toolNames = scalaFiles(tools)
       .map(_.getFileName.toString.stripSuffix(".scala")).toSet
-    val defined = srcs.flatMap { case (_, src) =>
-      """\b(?:val|def|object)\s+(\w+)""".r.findAllMatchIn(src).map(_.group(1))
+    val main = Paths.get("src/main/scala")
+    // (in the main tree, keyword, name)
+    val definitions = srcs.flatMap { case (f, src) =>
+      """\b(val|def|object|class|trait|type)\s+(\w+)""".r.findAllMatchIn(src)
+        .map(m => (f.startsWith(main), m.group(1), m.group(2)))
+    }
+    val defined = definitions.collect {
+      case (_, k, n) if Set("val", "def", "object")(k) => n
     }.toSet
     val cited = """\bProbe[A-Z]\w*|\btools/(\w+)""".r
     val cites = srcs.flatMap { case (f, src) =>
@@ -84,5 +92,20 @@ class ParquetReadGuardSpec extends AnyFunSuite {
     }
     assert(dangling.isEmpty, "cite a SCALE.md section instead of a " +
       s"deleted tool: ${dangling.map { case (n, at) => s"$n at $at" }.mkString(", ")}")
+    // a link may wrap across comment lines (`[[a.b\n  * .Name]]`); its
+    // last segment must name a main-tree definition of any kind
+    val links = srcs.filter(_._1.startsWith(main))
+      .flatMap { case (f, src) =>
+        """\[\[([^\]]+)\]\]""".r.findAllMatchIn(src).map { m =>
+          val line = src.substring(0, m.start).count(_ == '\n') + 1
+          val target = m.group(1).replaceAll("""\s*\*\s*|\s+""", "")
+          (target.split("[.#]").last, s"$f:$line")
+        }
+      }
+    assert(links.nonEmpty)
+    val mainDefined = definitions.collect { case (true, _, n) => n }.toSet
+    val deadLinks = links.filterNot { case (name, _) => mainDefined(name) }
+    assert(deadLinks.isEmpty, "scaladoc links to undefined names: " +
+      deadLinks.map { case (n, at) => s"$n at $at" }.mkString(", "))
   }
 }

@@ -156,8 +156,9 @@ class PlanSpec extends AnyFunSuite {
     val store = (0L until 9000L).map(i => (i, i * 2654435761L)).toDF("id", "sh")
     // 3000 docs: above bruteBelow (2048) → banding path; × 36 combos
     // = 108k keyed rows → batch-side broadcast
-    val batch = (100000L until 103000L).map(i => (i, i * 40503L)).toDF("id", "sh")
-    val pSmall = graft.llm.Dedup.hammingProbeTouch(store, batch)
+    val (batch, nBatch) = graft.core.Caching.eagerCounted(
+      (100000L until 103000L).map(i => (i, i * 40503L)).toDF("id", "sh"))
+    val pSmall = graft.llm.Dedup.hammingProbeTouch(store, batch, nBatch)
       .queryExecution.executedPlan.toString
     assert(pSmall.contains("BroadcastHashJoin"),
       s"3000-doc batch × 36 combos is provably small — broadcast:\n$pSmall")
@@ -166,9 +167,9 @@ class PlanSpec extends AnyFunSuite {
     // 8000 batch docs × 36 = 288k keyed rows > ProbeBroadcastKeyedRows
     // → both candidate joins sort-merge (the hot-bucket semi-join
     // stays broadcast: its build is the distinct (combo, key) set)
-    val bigBatch = spark.range(200000L, 208000L)
-      .selectExpr("id", "id * 2654435761 AS sh")
-    val pBig = graft.llm.Dedup.hammingProbeTouch(store, bigBatch)
+    val (bigBatch, nBig) = graft.core.Caching.eagerCounted(
+      spark.range(200000L, 208000L).selectExpr("id", "id * 2654435761 AS sh"))
+    val pBig = graft.llm.Dedup.hammingProbeTouch(store, bigBatch, nBig)
       .queryExecution.executedPlan.toString
     assert(pBig.contains("SortMergeJoin"),
       s"288k keyed batch rows must sort-merge:\n$pBig")
