@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -15,9 +15,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * across n-1 intermediate arrays) and then hashes it — measured as
   * the dominant cost of q72/q78 once the bench forced real execution
   * (~13 s for 23M windows at sf10). This kernel hashes each token
-  * once (`XxHash64Function`, the engine's own hash) and chains the n
-  * token hashes per window in pure Long arithmetic — no intermediate
-  * strings, O(len·n) Long ops per document, inside WholeStageCodegen.
+  * once (Spark's `xxhash64`, via [[MinHashBands.hashString]]) and
+  * chains the n token hashes per window in pure Long arithmetic — no
+  * intermediate strings, O(len·n) Long ops per document, inside
+  * WholeStageCodegen.
   *
   * Window h equals window h' iff their token sequences match (modulo
   * 64-bit collisions, as with hashing the gram text) — the doc-level
@@ -37,7 +38,7 @@ object NgramHashes {
     val tok = new Array[Long](m)
     var i = 0
     while (i < m) {
-      tok(i) = XxHash64Function.hash(words.getUTF8String(i), StringType, 42L)
+      tok(i) = MinHashBands.hashString(words.getUTF8String(i), 42L)
       i += 1
     }
     val out = new Array[Long](m - n + 1)
@@ -45,7 +46,7 @@ object NgramHashes {
     while (i <= m - n) {
       var h = 42L
       var j = i
-      while (j < i + n) { h = XxHash64Function.hash(tok(j), LongType, h); j += 1 }
+      while (j < i + n) { h = MinHashBands.hashLong(tok(j), h); j += 1 }
       out(i) = h
       i += 1
     }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -47,7 +47,7 @@ object RepetitionStats64 {
     val tok = new Array[Long](m)
     var i = 0
     while (i < m) {
-      tok(i) = XxHash64Function.hash(words.getUTF8String(i), StringType, 42L)
+      tok(i) = MinHashBands.hashString(words.getUTF8String(i), 42L)
       i += 1
     }
     def windowHashes(n: Int): Array[Long] = {
@@ -57,7 +57,7 @@ object RepetitionStats64 {
       while (i <= m - n) {
         var h = 42L
         var j = i
-        while (j < i + n) { h = XxHash64Function.hash(tok(j), LongType, h); j += 1 }
+        while (j < i + n) { h = MinHashBands.hashLong(tok(j), h); j += 1 }
         out(i) = h
         i += 1
       }

@@ -29,10 +29,10 @@ object Admission {
 
   /** A batch that carries one id on more than one row. Admission keys
     * every per-row artifact by id (audit rows, band-index rows, media
-    * fingerprints), and the arrival frame folds each row's MinHash
-    * bands on its own, where the corpus index's `groupBy(id)` banding
-    * would merge the repeated rows' shingle sets. Such a batch is
-    * rejected before any store or audit row is written. */
+    * fingerprints), and MinHash banding folds each row on its own, so
+    * a repeated id would enter the stores with one band set and one
+    * audit verdict per row. Such a batch is rejected before any store
+    * or audit row is written. */
   final class RepeatedIdException(val idCol: String, val id: Any)
     extends IllegalArgumentException(
       s"arriving batch repeats $idCol = $id; admission needs one row per id")

@@ -38,16 +38,16 @@ object Bpe {
   final case class Merge(merge_rank: Int, lhs: String, rhs: String,
                          merged: String, pair_count: Long)
 
-  /** The word table BPE trains on: occurrence-counted alnum tokens,
-    * each split into single-character symbols. The `[a-z0-9]+` filter
-    * keeps the symbol alphabet ASCII so the paren-delimited DuckDB
-    * oracle twin and byte-order tie-breaks are exact. */
   /** The corpus tokens BPE sees: whitespace tokens of lower(trim())
     * restricted to the alnum alphabet (see [[wordCounts]]). Public so
     * the encode-side query tokenizes identically to training. */
   def alnumTokens(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     filter(Spans.nonEmptyTokens(text), w => w.rlike("^[a-z0-9]+$"))
 
+  /** The word table BPE trains on: occurrence-counted alnum tokens,
+    * each split into single-character symbols. The `[a-z0-9]+` filter
+    * keeps the symbol alphabet ASCII so the paren-delimited DuckDB
+    * oracle twin and byte-order tie-breaks are exact. */
   def wordCounts(docs: DataFrame, textCol: String): DataFrame =
     docs
       .select(explode(alnumTokens(col(textCol))).as("w"))

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.functions.MinHashBands
 import graft.functions.SimHash64.simhash64
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -60,9 +61,9 @@ object Dedup {
     * one `transform`+`array_min` pair per hash, no UDF.
     *
     * REFERENCE form only — a DIFFERENT hash family from the
-    * production paths ([[candidatesFromShingles]] /
-    * [[bandHashesLocal]] derive their 64 hashes Kirsch-Mitzenmacher
-    * style from two base hashes): signatures from here are NOT
+    * production paths ([[bandHashes]], the `MinHashBands` kernel,
+    * derives its 64 hashes Kirsch-Mitzenmacher style from two base
+    * hashes): signatures from here are NOT
     * comparable or bucketable against theirs, and each index re-reads
     * the whole shingle string (the measured ~10× slower shape). Use
     * the candidate generators for real dedup. */
@@ -80,162 +81,67 @@ object Dedup {
     * pairs as b=8/r=2 does.
     *
     * Scale mechanics (the 100 TB path):
-    *  - the banded signature is persisted before the self-join, so the
-    *    shingling + 64 hash passes run ONCE, not once per join side;
-    *  - band hashes are computed directly over the signature longs
-    *    (`xxhash64(band, h1..h4)`) — no array slice / string cast;
+    *  - each document's signature and band hashes are one per-row fold
+    *    ([[bandHashes]]) — no signature shuffle; the only shuffle is
+    *    the bucket aggregation;
     *  - `maxBucketSize` drops pathological buckets (empty/boilerplate
     *    text all hashing identically). A true near-dup pair lost from
     *    one oversized bucket still collides in its other ~b·j^r bands,
     *    so the cap costs ~zero recall while bounding worst-case skew.
+    *
+    * Each input row is banded on its own: rows repeating an id are
+    * not merged into one shingle set, so an id's buckets are the union
+    * of its rows' buckets (and a pair of two rows of one id is never
+    * emitted, since id_a < id_b).
     *
     * Returns distinct (id_a, id_b) with id_a < id_b.
     */
   def minhashLshCandidates(df: DataFrame, idCol: String, textCol: String,
                            shingleN: Int = 2, bands: Int = 16, rows: Int = 4,
                            maxBucketSize: Int = 500): DataFrame =
-    // no persist on the shingle projection here: the explode-based
-    // signature below reads it exactly ONCE, so caching it would be
-    // pure population overhead — the generate∘verify callers cache
-    // theirs because the verify joins read it twice more
+    // no persist on the shingle projection here: the banding below
+    // reads it exactly ONCE, so caching it would be pure population
+    // overhead — the generate∘verify callers cache theirs because the
+    // verify joins read it twice more
     candidatesFromShingles(
       df.select(col(idCol).as("id"), shingles(col(textCol), shingleN).as("sh")),
       bands, rows, maxBucketSize)
 
   /** Candidate generation over an `(id, sh: array<string>)` shingle
-    * table. The shingles expression is referenced once (the explode),
-    * so callers need no cache for THIS function — the historical
-    * round-1 pathology (CollapseProject inlining the shingling tree
-    * into 64 `array_min(transform(...))` hash passes) died with the
-    * explode rewrite below. Callers that ALSO verify candidates against
-    * the shingle sets should cache the input for those extra reads. */
+    * table. The shingles column is read once (the banding), so callers
+    * need no cache for THIS function. Callers that ALSO verify
+    * candidates against the shingle sets should cache the input for
+    * those extra reads. */
   private[graft] def candidatesFromShingles(sh: DataFrame, bands: Int, rows: Int,
                                           maxBucketSize: Int): DataFrame =
     bucketPairs(bandedSignatures(sh, bands, rows)
       .groupBy(col("band"), col("band_hash"))
       .agg(collect_list(col("id")).as("ids")), maxBucketSize)
 
-  /** The signature+banding stage of [[candidatesFromShingles]],
-    * exposed as its own table: one `(id, band, band_hash)` row per
-    * document per band. This IS the persistable LSH index — see
-    * [[minhashBandIndex]]/[[minhashProbePairs]] for the incremental
+  /** The banding stage of [[candidatesFromShingles]] as its own table:
+    * one `(id, band, band_hash)` row per input row per band, the id
+    * keeping the caller's type. A map-side `posexplode` of
+    * [[bandHashes]] (band = position): no shuffle, and a null or empty
+    * shingle set yields no rows. This IS the persistable LSH index —
+    * see [[minhashBandIndex]]/[[minhashProbePairs]] for the incremental
     * corpus-growth path built on it. */
   private[graft] def bandedSignatures(sh: DataFrame, bands: Int,
-                                      rows: Int): DataFrame = {
-    val numHashes = bands * rows
-    require(numHashes <= 64,
-      s"signature width is capped at 64 hashes (wide-row agg cost), got $numHashes")
-    // Signature via explode → TWO codegen'd xxhash64 base hashes over
-    // the shingle string → 64 derived hashes h_j = xxhash64(j, h1, h2)
-    // → hash-agg of 64 min()s (partial agg map-side, one shuffle on
-    // id). This stays inside WholeStageCodegen end to end; the natural
-    // `array_min(transform(sh, xxhash64))` × 64 form runs interpreted
-    // per element (HOFs don't codegen) and measured ~10× slower.
-    //
-    // The derivation is in the Kirsch-Mitzenmacher spirit (expensive
-    // variable-length hashing once, cheap fixed-width mixing per
-    // index): each of the original 64 independent xxhash64 calls
-    // re-read the WHOLE shingle string (64 passes over every byte);
-    // here the string is hashed twice and each derived hash is an
-    // xxhash64 over a fixed 16-byte (h1, h2) input seeded by j — a
-    // constant-cost mix per index regardless of shingle length. Unlike
-    // the literal h1 + j·h2 form (whose wrapped Long arithmetic would
-    // throw under Spark 4's ANSI mode) or an XOR-rotate derivation
-    // (where h_j ⊕ h_k depends only on h2, i.e. the family is
-    // pairwise-correlated and the independent-hash S-curve analysis
-    // would not strictly apply), the full avalanche of the outer
-    // xxhash64 makes the h_j behave as independent uniform draws in
-    // the random-oracle model, so the b·r S-curve recall analysis
-    // above applies as stated; the q30/q52 oracles re-verify exact
-    // output equality under this family.
-    val sig = sh.select(col("id"), explode(col("sh")).as("s"))
-      .select(col("id"),
-        xxhash64(lit(0), col("s")).as("h1"), xxhash64(lit(1), col("s")).as("h2"))
-      .groupBy(col("id"))
-      .agg(min(xxhash64(lit(0), col("h1"), col("h2"))).as("mh0"),
-        (1 until numHashes).map(j =>
-          min(xxhash64(lit(j), col("h1"), col("h2"))).as(s"mh$j")): _*)
-    val banded = sig.select(col("id"), posexplode(
-        array((0 until bands).map { b =>
-          xxhash64((lit(b) +: (0 until rows).map(r =>
-            col(s"mh${b * rows + r}"))): _*)
-        }: _*)).as(Seq("band", "band_hash")))
-    // Bucket-collect pair generation: ONE shuffle (the bucket agg)
-    // instead of the r3 window-cap → eager-cache → self-join chain
-    // (three shuffles plus a cache-materialization job; the bucket
-    // fold lives in candidatesFromShingles — each bucket folds to its
-    // member-id list, the size filter IS the cap, pairs come from a
-    // double-explode within the bucket, k² local rows bounded by
-    // maxBucketSize² ≈ 2 MB worst case, never a join. At 100 TB this
-    // is a pure 2-shuffle pipeline: signature agg → bucket agg.)
-    banded
-  }
+                                      rows: Int): DataFrame =
+    sh.select(col("id"), posexplode(bandHashes(col("sh"), bands, rows))
+      .as(Seq("band", "band_hash")))
 
-  /** Per-document band hashes computed LOCALLY (a plain JVM fold), in
-    * BIT-EXACT parity with the batch banding above: every hash goes
-    * through Spark's own `XxHash64Function` with the identical
-    * argument types and fold order the `xxhash64(...)` columns use
-    * (seed 42; `lit(j)`/`lit(b)` are IntegerType, h1/h2/mh are
-    * LongType; multi-arg calls fold left-to-right through the
-    * accumulated seed). This is the PER-ROW form of the signature,
-    * used by the streaming twin and (as the [[bandHashes]] column) by
-    * the admission arrival frame: a row carries the whole document,
-    * so the batch side's explode→agg (built to get map-side combine
-    * across its shuffle) degenerates to a per-doc fold — one pass over
-    * the shingles, no shuffle, no interpreted HOF tree. StreamingSpec
-    * pins the parity end-to-end (stream candidate set == batch
-    * candidate set), AdmissionSpec pins the arrival's index rows
-    * against [[minhashBandIndex]]. */
-  private[graft] def bandHashesLocal(shingles: Seq[String], bands: Int,
-                                     rows: Int): Array[Long] = {
-    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-    import org.apache.spark.unsafe.types.UTF8String
-    val numHashes = bands * rows
-    require(numHashes <= 64,
-      s"signature width is capped at 64 hashes, got $numHashes")
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    shingles.foreach { s =>
-      val u = UTF8String.fromString(s)
-      val h1 = XxHash64Function.hash(u, StringType,
-        XxHash64Function.hash(0, IntegerType, 42L))
-      val h2 = XxHash64Function.hash(u, StringType,
-        XxHash64Function.hash(1, IntegerType, 42L))
-      var j = 0
-      while (j < numHashes) {
-        val hj = XxHash64Function.hash(h2, LongType,
-          XxHash64Function.hash(h1, LongType,
-            XxHash64Function.hash(j, IntegerType, 42L)))
-        if (hj < mins(j)) mins(j) = hj
-        j += 1
-      }
-    }
-    Array.tabulate(bands) { b =>
-      var seed = XxHash64Function.hash(b, IntegerType, 42L)
-      var r = 0
-      while (r < rows) {
-        seed = XxHash64Function.hash(mins(b * rows + r), LongType, seed)
-        r += 1
-      }
-      seed
-    }
-  }
-
-  /** [[bandHashesLocal]] as a per-row column over an `array<string>`
-    * shingle column: each document's `bands` band hashes in band
-    * order, null for a null or empty shingle set (the explode in
-    * [[bandedSignatures]] emits no rows for those). This is the fused
-    * form of the batch banding: one pass over each row's shingles, no
-    * explode and no shuffle, so a cached batch frame can carry its
-    * bands as one more column ([[bandRows]] unfolds them). It equals
-    * [[bandedSignatures]] row for row on unique ids; rows sharing an
-    * id are the one divergence, since the batch form's `groupBy(id)`
-    * merges their shingle sets into one signature. */
+  /** Each document's `bands` MinHash band hashes, in band order, from
+    * its `array<string>` shingle column — null for a null or empty
+    * shingle set. One codegen'd per-row fold (the `MinHashBands`
+    * kernel, which documents the hash family): one pass over the
+    * shingles, no explode and no shuffle, so a cached batch frame can
+    * carry its bands as one more column ([[bandRows]] unfolds them).
+    * Every MinHash path in the engine — the batch index and candidate
+    * generator, the admission arrival frame, the streaming twin —
+    * bands through this column, so their band hashes agree bit for
+    * bit. */
   def bandHashes(sh: Column, bands: Int = 16, rows: Int = 4): Column =
-    udf { (s: Seq[String]) =>
-      if (s == null || s.isEmpty) null
-      else bandHashesLocal(s, bands, rows).toSeq
-    }.apply(sh)
+    MinHashBands.minhashBands(sh, bands, rows)
 
   /** `(id: long, band, band_hash)` rows from a frame carrying a
     * [[bandHashes]] column: the [[minhashBandIndex]] row shape, by a
@@ -257,16 +163,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"))
       .distinct()
 
-  /** MinHash-LSH candidates verified by exact shingle Jaccard — the
-    * complete at-scale near-dup pipeline (generate ∘ verify). The
-    * verifier joins each candidate pair back to its two shingle sets
-    * and computes |∩|/|∪| per pair via `array_intersect` — cost is
-    * O(|candidates|), never O(n²), and the output is exact, which is
-    * what makes this SQL-oracle-checkable despite the sketch inside:
-    * with b=16/r=4 the generator's miss probability at j ≥ threshold
-    * is < 1e-3 (deterministic seeded hashes — verified against the
-    * exact all-pairs oracle at the test scale factors).
-    */
   /** The generate ∘ verify core for input ALREADY exact-deduped to one
     * row per canonical text (e.g. after a fingerprint keep-min pass,
     * as in q52 corpus-prep): [[minhashNearDupPairs]] minus the
@@ -286,21 +182,42 @@ object Dedup {
     * `(id, sh: array<string>)` shingle table — e.g. a corpus-prep plan
     * whose exact-dedup cache carries shingles instead of raw text, so
     * the near-dup stage adds no second cache and never re-tokenizes.
-    * `sh` is consumed three times (candidate explode + both verify
+    * `sh` is consumed three times (candidate banding + both verify
     * sides): the caller must have it persisted. */
   def nearDupPairsFromShingles(sh: DataFrame, threshold: Double,
                                bands: Int = 16, rows: Int = 4,
                                maxBucketSize: Int = 500): DataFrame =
-    candidatesFromShingles(sh.select(col("id"), col("sh")),
-        bands, rows, maxBucketSize)
+    verifyJaccard(candidatesFromShingles(sh.select(col("id"), col("sh")),
+      bands, rows, maxBucketSize), sh, threshold)
+
+  /** The exact-Jaccard verifier shared by every MinHash pipeline:
+    * joins each candidate pair `(id_a, id_b, …)` back to its two rows
+    * of the `(id, sh, …)` shingle table and keeps the pairs whose
+    * |∩|/|∪| (via `array_intersect`) is at least `threshold`. Returns
+    * `(id_a, id_b, <c>_a, <c>_b for each carried column c, jaccard)`;
+    * `carry` names columns of `sh` to bring along from both sides. */
+  private def verifyJaccard(cand: DataFrame, sh: DataFrame, threshold: Double,
+                            carry: String*): DataFrame =
+    cand
       .join(sh.as("sa"), col("id_a") === col("sa.id"))
       .join(sh.as("sb"), col("id_b") === col("sb.id"))
       .withColumn("n_inter", size(array_intersect(col("sa.sh"), col("sb.sh"))))
-      .select(col("id_a"), col("id_b"),
+      .select(Seq(col("id_a"), col("id_b")) ++
+        carry.flatMap(c => Seq(col(s"sa.$c").as(s"${c}_a"), col(s"sb.$c").as(s"${c}_b"))) :+
         (col("n_inter").cast("double") /
-          (size(col("sa.sh")) + size(col("sb.sh")) - col("n_inter"))).as("jaccard"))
+          (size(col("sa.sh")) + size(col("sb.sh")) - col("n_inter"))).as("jaccard"): _*)
       .where(col("jaccard") >= threshold)
 
+  /** MinHash-LSH candidates verified by exact shingle Jaccard — the
+    * complete at-scale near-dup pipeline (generate ∘ verify). The
+    * verifier joins each candidate pair back to its two shingle sets
+    * and computes |∩|/|∪| per pair via `array_intersect` — cost is
+    * O(|candidates|), never O(n²), and the output is exact, which is
+    * what makes this SQL-oracle-checkable despite the sketch inside:
+    * with b=16/r=4 the generator's miss probability at j ≥ threshold
+    * is < 1e-3 (deterministic seeded hashes — verified against the
+    * exact all-pairs oracle at the test scale factors).
+    */
   def minhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                           threshold: Double, shingleN: Int = 2,
                           bands: Int = 16, rows: Int = 4,
@@ -322,16 +239,8 @@ object Dedup {
       .agg(min(col("id")).as("id"), min_by(col("text"), col("id")).as("text"))
     val sh = graft.core.Caching.eager(reps.select(col("id"), col("fp"),
         shingles(col("text"), shingleN).as("sh")))
-    val candReps = candidatesFromShingles(
-      sh.select(col("id"), col("sh")), bands, rows, maxBucketSize)
-    val verifiedReps = candReps
-      .join(sh.as("sa"), col("id_a") === col("sa.id"))
-      .join(sh.as("sb"), col("id_b") === col("sb.id"))
-      .withColumn("n_inter", size(array_intersect(col("sa.sh"), col("sb.sh"))))
-      .select(col("id_a"), col("id_b"), col("sa.fp").as("fp_a"), col("sb.fp").as("fp_b"),
-        (col("n_inter").cast("double") /
-          (size(col("sa.sh")) + size(col("sb.sh")) - col("n_inter"))).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    val verifiedReps = verifyJaccard(candidatesFromShingles(
+      sh.select(col("id"), col("sh")), bands, rows, maxBucketSize), sh, threshold, "fp")
     val members = base.select(col("fp"), col("id"))
     // cross-group pairs: every member of group A × every member of B
     val cross = verifiedReps
@@ -349,11 +258,6 @@ object Dedup {
     if (threshold <= 1.0) cross.union(within) else cross
   }
 
-  /** Exact Jaccard similarity for given pairs (the post-LSH verifier):
-    * explode shingles, join on shingle, |∩| / (|A|+|B|-|∩|). The
-    * exploded shingle table is persisted — it feeds the size agg and
-    * BOTH sides of the intersection self-join, and would otherwise
-    * re-tokenize three times. */
   /** The persistable MinHash-LSH INDEX of a corpus: one `(id, band,
     * band_hash)` row per document per band — exactly the banded
     * signature table the batch pipeline aggregates into buckets, but
@@ -365,7 +269,12 @@ object Dedup {
     * same shingle order and bands × rows (the defaults of both agree;
     * the derived-hash family is deterministic, so index and probe agree
     * bit-for-bit across sessions — LlmSpec pins the parquet
-    * round-trip). */
+    * round-trip).
+    *
+    * Each input row is banded on its own: rows repeating an id yield
+    * one set of band rows each, not one signature over their merged
+    * shingle sets. On unique ids this is the row set the candidate
+    * generator buckets. */
   def minhashBandIndex(df: DataFrame, idCol: String, textCol: String,
                        shingleN: Int = 2, bands: Int = 16,
                        rows: Int = 4): DataFrame =
@@ -389,8 +298,8 @@ object Dedup {
     * consumer. The band rows unfold map-side ([[bandRows]]), so the
     * probe adds no batch-sized cache and no signature shuffle.
     *
-    * What stays cold: every corpus signature (the expensive 64-hash
-    * aggregation) comes from the index; corpus texts are re-shingled
+    * What stays cold: every corpus signature (the 64-hash fold over
+    * every corpus shingle) comes from the index; corpus texts are re-shingled
     * ONLY for docs that appear in a surviving candidate pair (a
     * semi-join-restricted scan — candidate-sized, not corpus-sized).
     * What shuffles: only buckets the batch actually hits (a semi-join
@@ -460,18 +369,14 @@ object Dedup {
       .select(col(idCol).cast("long").as("id"),
         shingles(col(textCol), 2).as("sh")))
     val allSh = newSh.unionByName(oldSh)
-    cand
-      .join(allSh.as("sa"), col("id_a") === col("sa.id"))
-      .join(allSh.as("sb"), col("id_b") === col("sb.id"))
-      .withColumn("n_inter",
-        size(array_intersect(col("sa.sh"), col("sb.sh"))))
-      .select(col("id_a"), col("id_b"),
-        (col("n_inter").cast("double") /
-          (size(col("sa.sh")) + size(col("sb.sh")) - col("n_inter")))
-          .as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    verifyJaccard(cand, allSh, threshold)
   }
 
+  /** Exact Jaccard similarity for given pairs (the post-LSH verifier):
+    * explode shingles, join on shingle, |∩| / (|A|+|B|-|∩|). The
+    * exploded shingle table is persisted — it feeds the size agg and
+    * BOTH sides of the intersection self-join, and would otherwise
+    * re-tokenize three times. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    shingleN: Int, maxId: Option[Long] = None): DataFrame = {
     val base = maxId.map(m => df.where(col(idCol) < m)).getOrElse(df)

@@ -390,34 +390,6 @@ object Similarity {
       .agg(count(lit(1)).as("n"), sum(col("q")).as("sum_q"))
       .withColumn("mu", col("sum_q").cast("double") / col("n"))
 
-  /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
-    * near-duplicate pairs via cluster-then-compare. The corpus is
-    * assigned to its nearest sampled-k-means centroid BY COSINE (so
-    * assignment is scale-free: a vector and any positive rescaling of
-    * it land in the same cluster, deterministically), and exact
-    * pairwise verification runs only WITHIN each cluster.
-    *
-    * Scale shape: candidate pairs are Σ cluster² ≈ n²/k. By default k
-    * AUTO-SIZES to n/targetClusterSize (one bounded count), holding
-    * mean cluster size — and so candidates-per-row — constant as the
-    * corpus grows (the paper runs 50k clusters over 5B embeddings;
-    * same corpus-sized tuning as [[Dedup.cosineNearDupBucketed]]'s
-    * banding). Assignment is one codegen'd argmax-dot kernel call per
-    * row against a unit-normalized centroid matrix carried as a
-    * reference object (plan size independent of k); the only shuffle
-    * is the per-cluster self-join on an equality key AQE can
-    * skew-split; the assigned/quantized frame is cached once and read
-    * by both join sides.
-    *
-    * Verification shares [[Dedup]]'s exact integer-domain cosine
-    * predicate, so every emitted pair IS a true near-dup pair
-    * (precision 1 by construction); recall is the co-cluster
-    * probability — exactly 1 for parallel vectors, measured ≥0.8 on
-    * perturbed near-parallel twins in LlmSpec. Compared to the
-    * sign-LSH route ([[Dedup.cosineNearDupBucketed]]) this trades the
-    * multi-band union-of-buckets recall bound for data-adaptive
-    * single-assignment buckets — the two candidate generators are
-    * complementary; both end in the same exact verifier. */
   /** Distributed Lloyd refinement over the FULL corpus — the at-scale
     * continuation of [[sampleKMeans]] for cluster counts past the
     * driver-sample regime (n ≳ maxCentroids·targetClusterSize). Each
@@ -485,6 +457,34 @@ object Similarity {
       if (norm == 0.0) cv else cv.map(x => (x / norm).toFloat)
     }
 
+  /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
+    * near-duplicate pairs via cluster-then-compare. The corpus is
+    * assigned to its nearest sampled-k-means centroid BY COSINE (so
+    * assignment is scale-free: a vector and any positive rescaling of
+    * it land in the same cluster, deterministically), and exact
+    * pairwise verification runs only WITHIN each cluster.
+    *
+    * Scale shape: candidate pairs are Σ cluster² ≈ n²/k. By default k
+    * AUTO-SIZES to n/targetClusterSize (one bounded count), holding
+    * mean cluster size — and so candidates-per-row — constant as the
+    * corpus grows (the paper runs 50k clusters over 5B embeddings;
+    * same corpus-sized tuning as [[Dedup.cosineNearDupBucketed]]'s
+    * banding). Assignment is one codegen'd argmax-dot kernel call per
+    * row against a unit-normalized centroid matrix carried as a
+    * reference object (plan size independent of k); the only shuffle
+    * is the per-cluster self-join on an equality key AQE can
+    * skew-split; the assigned/quantized frame is cached once and read
+    * by both join sides.
+    *
+    * Verification shares [[Dedup]]'s exact integer-domain cosine
+    * predicate, so every emitted pair IS a true near-dup pair
+    * (precision 1 by construction); recall is the co-cluster
+    * probability — exactly 1 for parallel vectors, measured ≥0.8 on
+    * perturbed near-parallel twins in LlmSpec. Compared to the
+    * sign-LSH route ([[Dedup.cosineNearDupBucketed]]) this trades the
+    * multi-band union-of-buckets recall bound for data-adaptive
+    * single-assignment buckets — the two candidate generators are
+    * complementary; both end in the same exact verifier. */
   def semanticNearDupPairs(corpus: DataFrame, idCol: String,
                            vecCol: String, threshold: Double,
                            nCentroids: Int = 0, sampleSize: Int = 0,

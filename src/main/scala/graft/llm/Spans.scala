@@ -53,6 +53,22 @@ object Spans {
     }
   }
 
+  /** The hashed windows of one document: the [[graft.functions.NgramHashes]]
+    * kernel (token-hash chaining, no gram strings) — position-for-
+    * position equal in equality structure to hashing
+    * [[positionalNgrams]]' strings, at a fraction of the cost. */
+  private def hashedNgrams(text: Column, n: Int): Column =
+    graft.functions.NgramHashes.ngram_hashes(nonEmptyTokens(text), n)
+
+  private def gramRows(docs: DataFrame, idCol: String, textCol: String,
+                       n: Int, hashGrams: Boolean): DataFrame =
+    if (hashGrams)
+      docs.select(col(idCol).as("doc_id"),
+        explode(hashedNgrams(col(textCol), n)).as("g"))
+    else
+      docs.select(col(idCol).as("doc_id"),
+        explode(positionalNgrams(col(textCol), n)).as("g"))
+
   /** Cross-document duplicated-span rates: for each document, how many
     * of its `n`-token windows carry a gram that appears in at least
     * `minDocs` distinct documents corpus-wide — a count that INCLUDES
@@ -83,22 +99,6 @@ object Spans {
     * bit-identical stats vs the string-keyed path; a 64-bit collision
     * (~1e-9 at billions of distinct grams) could only overcount
     * dup_windows by one window pair. */
-  /** The hashed windows of one document: the [[graft.functions.NgramHashes]]
-    * kernel (token-hash chaining, no gram strings) — position-for-
-    * position equal in equality structure to hashing
-    * [[positionalNgrams]]' strings, at a fraction of the cost. */
-  private def hashedNgrams(text: Column, n: Int): Column =
-    graft.functions.NgramHashes.ngram_hashes(nonEmptyTokens(text), n)
-
-  private def gramRows(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int, hashGrams: Boolean): DataFrame =
-    if (hashGrams)
-      docs.select(col(idCol).as("doc_id"),
-        explode(hashedNgrams(col(textCol), n)).as("g"))
-    else
-      docs.select(col(idCol).as("doc_id"),
-        explode(positionalNgrams(col(textCol), n)).as("g"))
-
   def spanDedupStats(docs: DataFrame, idCol: String, textCol: String,
                      n: Int = 8, minDocs: Int = 2,
                      hashGrams: Boolean = true): DataFrame = {

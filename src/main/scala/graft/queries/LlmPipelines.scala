@@ -3392,11 +3392,6 @@ object LlmPipelines {
     Some(multimodalFreezeOracle(
       q80GraySparse(_, _), q84SampleSparse(_))))
 
-  /** The q103 oracle, GENERATED: q98's text-leg CTEs (gate / exact /
-    * batch-touching exact-Jaccard near-dup) verbatim, plus the q80
-    * dHash and q84 energy-gradient bit tables ([[q80Gray]] /
-    * [[q84Sample]]) joined all-pairs at Hamming <= 7 and restricted by
-    * the same monotone rule as the text near-dup CTE. */
   /** q103/q104's audit: every 10th document arrives as the batch, and
     * each modality's `(id, sh)` fingerprints come straight from its
     * synthetic payload table (`imageTable` / `audioTable`), per side. */
@@ -3443,6 +3438,11 @@ object LlmPipelines {
       .orderBy(col("doc_id"))
   }
 
+  /** The q103 oracle, GENERATED: q98's text-leg CTEs (gate / exact /
+    * batch-touching exact-Jaccard near-dup) verbatim, plus the q80
+    * dHash and q84 energy-gradient bit tables ([[q80Gray]] /
+    * [[q84Sample]]) joined all-pairs at Hamming <= 7 and restricted by
+    * the same monotone rule as the text near-dup CTE. */
   private def q103Oracle: String = multimodalAdmissionOracle(
     q80Gray(_, _), q84Sample(_))
 

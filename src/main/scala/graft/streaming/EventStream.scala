@@ -158,13 +158,11 @@ object EventStream {
     * pairs against every document that shares an LSH band bucket
     * within the watermark horizon.
     *
-    * Construction: the shingle set comes from the IDENTICAL batch
-    * expression ([[graft.llm.Dedup.shingles]]); the 64-hash signature
-    * and band hashes are folded per row in
-    * [[graft.llm.Dedup.bandHashesLocal]] — bit-exact parity with the
-    * batch banding via Spark's own XxHash64 kernel (a stream row
-    * carries the whole document, so the batch's explode→agg shuffle
-    * shape degenerates to a per-doc fold). Buckets live in
+    * Construction: the shingle set and the band rows come from the
+    * IDENTICAL batch expressions — [[graft.llm.Dedup.shingles]], then a
+    * `posexplode` of [[graft.llm.Dedup.bandHashes]], the per-row
+    * banding kernel the batch index uses — so stream and batch band
+    * hashes agree bit for bit. Buckets live in
     * `flatMapGroupsWithState` keyed by (band, band_hash):
     *  - a new member emits one (id_a < id_b) pair per existing member
     *    — per band exactly once; a pair sharing several bands emits
@@ -191,21 +189,18 @@ object EventStream {
                                  idleTimeout: String = "24 hours"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
+    // parity with the batch banding: a null text (null shingle array)
+    // or an empty shingle set has null band hashes, so the posexplode
+    // emits no rows for it; a null/uncastable id or a null ts is
+    // dropped up front, since the typed bucket state below decodes
+    // both as non-null
     val banded = docs
       .select(col(idCol).cast("long").as("id"), col(tsCol).as("ts"),
         graft.llm.Dedup.shingles(col(textCol), shingleN).as("sh"))
-      // parity with the batch path's explode: a null/uncastable id, a
-      // null text (null shingle array) or an empty shingle set produces
-      // no banded rows there — here it would NPE in the typed flatMap
-      // (primitive Long / Seq decode of null), so drop it up front
-      .where(col("id").isNotNull && col("ts").isNotNull &&
-        col("sh").isNotNull && size(col("sh")) > 0)
-      .as[(Long, java.sql.Timestamp, Seq[String])]
-      .flatMap { case (id, ts, sh) =>
-        graft.llm.Dedup.bandHashesLocal(sh, bands, rows)
-          .iterator.zipWithIndex.map { case (bh, b) => (id, ts, b, bh) }
-      }
-      .toDF("id", "ts", "band", "band_hash")
+      .where(col("id").isNotNull && col("ts").isNotNull)
+      .select(col("id"), col("ts"),
+        posexplode(graft.llm.Dedup.bandHashes(col("sh"), bands, rows))
+          .as(Seq("band", "band_hash")))
     banded
       .withWatermark("ts", watermark)
       .as[(Long, java.sql.Timestamp, Int, Long)]

@@ -2,7 +2,7 @@ package graft
 
 import graft.core.Tables
 import graft.functions.{DmsToDecimalDegrees, RollingHash64, SimHash64, VectorKernels}
-import graft.llm.TextStats
+import graft.llm.{Dedup, TextStats}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,7 +22,8 @@ class CodegenParitySpec extends AnyFunSuite {
       o.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
-  private def runAll(): (Seq[(Long, Long)], Seq[(Long, Double)], Seq[(Long, Double, Double, Long)]) = {
+  private def runAll(): (Seq[(Long, Long)], Seq[(Long, Double)],
+      Seq[(Long, Double, Double, Long)], Seq[(Long, Seq[Long])]) = {
     val docs = Tables.documents(spark, SparkTestBase.sf).where($"doc_id" < 50)
     val sim = docs.select($"doc_id",
         SimHash64.simhash64(TextStats.tokens($"text"))
@@ -41,7 +42,13 @@ class CodegenParitySpec extends AnyFunSuite {
         VectorKernels.float_cosine($"embedding", $"embedding").as("fc"),
         VectorKernels.long_dot($"qv", $"qv").as("ld"))
       .as[(Long, Double, Double, Long)].collect().toSeq.sortBy(_._1)
-    (sim, dms, vec)
+    // MinHash band hashes, with null and empty shingle sets mixed in
+    val mh = docs.select($"doc_id", Dedup.bandHashes(
+        when($"doc_id" % 10 === 3, lit(null).cast("array<string>"))
+          .when($"doc_id" % 10 === 4, typedLit(Seq.empty[String]))
+          .otherwise(Dedup.shingles($"text", 2))).as("bands"))
+      .as[(Long, Seq[Long])].collect().toSeq.sortBy(_._1)
+    (sim, dms, vec, mh)
   }
 
   // deterministic planes: 3 bands x 4 bits over dim 64
@@ -502,5 +509,8 @@ class CodegenParitySpec extends AnyFunSuite {
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(runAll())
     assert(generated == interpreted)
     assert(generated._1.nonEmpty && generated._2.nonEmpty && generated._3.nonEmpty)
+    assert(generated._4.count(_._2 == null) == generated._4.count(_._1 % 10 == 3) +
+      generated._4.count(_._1 % 10 == 4))
+    assert(generated._4.exists(r => r._2 != null && r._2.size == 16))
   }
 }

@@ -438,17 +438,36 @@ class LlmSpec extends AnyFunSuite {
     }
   }
 
+  // band hashes of two fixed texts (order-2 shingles, 16 bands x 4
+  // rows), as the explode→aggregate reference below computed them
+  // before the per-row kernel replaced it in the engine
+  private val goldenBands = Map(
+    1L -> Seq(5775806916830444490L, 282128993142099180L, -501193720213249322L,
+      5616120995290543710L, -2807952493906022884L, 3054616193616768404L,
+      -1616390340772811538L, -6584960649176856971L, 5373282778751431159L,
+      8021493196228151980L, 5842881432452428571L, -3820493425638193663L,
+      -343639173975565062L, -4962822877454008631L, -5684136376902097701L,
+      -5668843015381566071L),
+    2L -> Seq(8669923271718110205L, -5581663953529294150L, -2908932909549173740L,
+      1458818468568396068L, -274378885259211912L, 3037590902826479935L,
+      6257719813886377126L, -2750654723130252579L, -37539586435737706L,
+      7048913388667740555L, -7590803237882384097L, -2647645245846975104L,
+      5530291442457673724L, 4335946291897270118L, 431969427130783301L,
+      5534291759575059134L))
+  private val goldenTexts = Map(
+    1L -> "the quick brown fox jumps over the lazy dog",
+    2L -> "lorem ipsum dolor sit amet consectetur")
+
   test("bandHashesLocal is bit-exact with the batch banding expressions") {
-    // the streaming MinHash path folds band hashes per row through
-    // Spark's XxHash64 kernel; this pins it against the exact column
-    // expressions the batch signature/banding uses (same literal
-    // types, same fold order) — StreamingSpec's stream==batch set
-    // equality depends on this, and a direct unit makes a divergence
-    // diagnosable per hash instead of per candidate set
+    // every MinHash path bands through the one per-row kernel
+    // (Dedup.bandHashes); this pins it against the plain column
+    // expressions of the hash family (same literal types, same fold
+    // order) in their explode→aggregate form, and against golden
+    // values, so a divergence is diagnosable per hash instead of per
+    // candidate set
     val bands = 16; val rows = 4; val numHashes = bands * rows
-    val df = Seq((1L, "the quick brown fox jumps over the lazy dog"),
-      (2L, "lorem ipsum dolor sit amet consectetur"),
-      (3L, "single"), (4L, "")).toDF("id", "text")
+    val df = (goldenTexts.toSeq ++ Seq((3L, "single"), (4L, "")))
+      .toDF("id", "text")
     val sh = df.select($"id", Dedup.shingles($"text", 2).as("sh"))
     val sig = sh.select($"id", explode($"sh").as("s"))
       .select($"id",
@@ -462,9 +481,27 @@ class LlmSpec extends AnyFunSuite {
           col(s"mh${b * rows + r}"))): _*)
       }: _*).as("bh"))
       .as[(Long, Seq[Long])].collect().toMap
-    val local = sh.as[(Long, Seq[String])].collect().toMap
-      .map { case (id, s) => id -> Dedup.bandHashesLocal(s, bands, rows).toSeq }
-    assert(local == batch)
+    val kernel = sh.select($"id", Dedup.bandHashes($"sh", bands, rows))
+      .as[(Long, Seq[Long])].collect().toMap
+    assert(kernel == batch)
+    assert(goldenBands.forall { case (id, g) => kernel(id) == g })
+  }
+
+  test("the band index bands each row on its own, also when an id repeats") {
+    // id 1 holds both golden texts in two rows; ids 2 and 3 hold one
+    // each. Each row gets its own band rows (no merge of the shingle
+    // sets), so id 1 shares every bucket of ids 2 and 3
+    val df = Seq((1L, goldenTexts(1L)), (1L, goldenTexts(2L)),
+      (2L, goldenTexts(1L)), (3L, goldenTexts(2L))).toDF("id", "text")
+    val index = Dedup.minhashBandIndex(df, "id", "text")
+      .as[(Long, Int, Long)].collect().toSeq
+    def rowsOf(id: Long, golden: Long) =
+      goldenBands(golden).zipWithIndex.map { case (h, b) => (id, b, h) }
+    assert(index.sorted == (rowsOf(1L, 1L) ++ rowsOf(1L, 2L) ++
+      rowsOf(2L, 1L) ++ rowsOf(3L, 2L)).sorted)
+    val cands = Dedup.minhashLshCandidates(df, "id", "text")
+      .as[(Long, Long)].collect().toSet
+    assert(cands == Set((1L, 2L), (1L, 3L)))
   }
 
   test("SimHash banding returns exactly the hamming<=maxHamming pair set") {

@@ -20,7 +20,8 @@ import scala.jdk.CollectionConverters._
   * longer exist: a measurement is cited by its SCALE.md section, and a
   * tool is cited only while its file is in the tree. It also keeps the
   * main tree's scaladoc links (`[[Name]]`, `[[a.b.Name]]`) pointing at
-  * names the tree still defines.
+  * names the tree still defines, and every main-tree scaladoc block
+  * attached to a definition rather than stacked on the next block.
   */
 class ParquetReadGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
@@ -107,5 +108,19 @@ class ParquetReadGuardSpec extends AnyFunSuite {
     val deadLinks = links.filterNot { case (name, _) => mainDefined(name) }
     assert(deadLinks.isEmpty, "scaladoc links to undefined names: " +
       deadLinks.map { case (n, at) => s"$n at $at" }.mkString(", "))
+    // a scaladoc block documents the definition below it, so a block
+    // followed directly by another block documents nothing
+    val orphanDocs = srcs.filter(_._1.startsWith(main))
+      .flatMap { case (f, src) =>
+        """/\*\*""".r.findAllMatchIn(src).flatMap { m =>
+          val end = src.indexOf("*/", m.end)
+          val next = if (end < 0) -1 else src.indexWhere(!_.isWhitespace, end + 2)
+          if (next >= 0 && src.startsWith("/**", next))
+            Some(s"$f:${src.substring(0, m.start).count(_ == '\n') + 1}")
+          else None
+        }
+      }
+    assert(orphanDocs.isEmpty, "scaladoc blocks followed by another block " +
+      s"instead of a definition: ${orphanDocs.mkString(", ")}")
   }
 }

@@ -482,8 +482,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming MinHash banding emits exactly the batch candidate pair set") {
     // the continuous-ingest twin of q30's operator: same shingle
-    // expression, bit-parity band hashes (Dedup.bandHashesLocal via
-    // Spark's XxHash64 kernel), band buckets in flatMapGroupsWithState.
+    // expression, the same band hashes (Dedup.bandHashes, the one
+    // banding kernel), band buckets in flatMapGroupsWithState.
     // Set equality against the batch generator over the whole corpus
     // is the end-to-end parity proof — a single diverging hash value
     // moves a document to a different bucket and breaks it. LlmSpec's
