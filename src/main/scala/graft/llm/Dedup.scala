@@ -737,7 +737,7 @@ object Dedup {
                               maxBucketSize: Int = 0): DataFrame = {
     val words = fp.columns.toSeq.filterNot(_ == "id")
     val (b, kb, _) = geometry(words.size, blocks, maxHamming, keyBlocks)
-    val combos = (0 until b).combinations(kb).toSeq
+    val combos = blockCombos(b, kb)
     val keyed = keyedRows(fp, words, b, kb)
     // CANONICAL-COMBO dedup instead of a distinct(): a near-identical
     // pair collides in MANY combinations (up to all of them), so the
@@ -1024,17 +1024,25 @@ object Dedup {
         .as(Seq("combo", "key")): _*)
   }
 
+  /** The C(blocks, keyBlocks) block combinations in enumeration order:
+    * combination i is bucket key i of [[comboKeyExprs]], mask i of
+    * [[comboMasks]] and index i of the batch canonical-combo lookup,
+    * so this one order is what makes their canonical combos agree. */
+  private def blockCombos(blocks: Int, keyBlocks: Int): Seq[Seq[Int]] =
+    (0 until blocks).combinations(keyBlocks).toSeq
+
+  /** The low `w` bits set. (1L << 64) wraps to 1 (Java shifts mod 64),
+    * so the full-width single-block case is spelled as -1L. */
+  private def widthMask(w: Int): Long = if (w == 64) -1L else (1L << w) - 1
+
   /** The C(blocks, keyBlocks) combination-key expressions over a
     * fingerprint given as its BIGINT word columns (see
-    * [[hammingCandidatesFromFp]]), in combination-enumeration order.
+    * [[hammingCandidatesFromFp]]), in [[blockCombos]] order.
     * The geometry must come from [[geometry]], so every key fits one
     * Long. */
   private[graft] def comboKeyExprs(words: Seq[Column], blocks: Int,
                                    keyBlocks: Int): Seq[Column] = {
     val (widths, offsets) = blockLayout(blocks, words.size)
-    // (1L << 64) wraps to 1 (Java shifts mod 64), so the full-width
-    // single-block case needs its mask spelled as -1L
-    def widthMask(w: Int): Long = if (w == 64) -1L else (1L << w) - 1
     def blockBits(b: Int): Column = {
       val w = widths(b)
       val (i, o) = (offsets(b) / 64, offsets(b) % 64)
@@ -1045,11 +1053,21 @@ object Dedup {
         shiftrightunsigned(words(i), o)
           .bitwiseOR(shiftleft(words(i + 1), 64 - o)).bitwiseAND(m)
     }
-    (0 until blocks).combinations(keyBlocks).map { combo =>
+    blockCombos(blocks, keyBlocks).map { combo =>
       combo.foldLeft(lit(0L)) { (acc, b) =>
         shiftleft(acc, widths(b)).bitwiseOR(blockBits(b))
       }
-    }.toSeq
+    }
+  }
+
+  /** One mask per combination of a 64-bit fingerprint's blocks, in
+    * [[comboKeyExprs]] order: a pair's canonical combination is the
+    * first index whose mask clears the pair's xor — the streaming
+    * Hamming twin's form of the batch canonical-combo filter. */
+  private[graft] def comboMasks(blocks: Int, keyBlocks: Int): Array[Long] = {
+    val (widths, offsets) = blockLayout(blocks)
+    blockCombos(blocks, keyBlocks).map(
+      _.map(b => widthMask(widths(b)) << offsets(b)).reduce(_ | _)).toArray
   }
 
   /** Embedding cosine near-dup in the exact integer domain: vectors

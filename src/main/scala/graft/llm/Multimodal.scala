@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
   * kernels is real and load-bearing: the schema contract, the
   * `mapPartitions` batching shape (the Scala twin of PySpark's
   * `mapInPandas` — one iterator per partition, amortized per-batch
-  * setup), and the partitioning strategy (media rows are fat, so
-  * repartition by byte budget, not row count, before decode).
+  * setup).
   */
 object Multimodal {
 
@@ -38,13 +37,6 @@ object Multimodal {
       kindCol.as("kind"),
       col(payloadCol).cast("binary").as("payload"),
       col(sourceCol).as("source"))
-
-  /** Rows-per-partition sizing by byte budget: media rows are orders of
-    * magnitude fatter than tabular rows; partition count must track
-    * Σbytes/budget or executors OOM at scale. */
-  def repartitionByBytes(df: DataFrame, approxTotalBytes: Long,
-                         budgetPerPartition: Long = 128L << 20): DataFrame =
-    df.repartition(math.max(1, (approxTotalBytes / budgetPerPartition).toInt))
 
   // ---- DECODE KERNELS --------------------------------------------------
   // Self-describing headers (BMP, WAV) are parsed FOR REAL — pure byte

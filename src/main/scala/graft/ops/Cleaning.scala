@@ -57,11 +57,6 @@ object Cleaning {
       .when(stype === "Regional", concat(region, lit(" Regional")))
       .otherwise(concat(region, lit(" Local")))
 
-  /** F25 zero-guarded division (NaN-safe ratio metrics).
-    * Reference behavior: `scripts/ads_passenger_travel_info_mi.py:442-445`. */
-  def safeDiv(num: Column, den: Column): Column =
-    when(den > 0, num / den).otherwise(lit(0.0))
-
   /** Exact integer division (truncating): Spark IntegralDivide ≡
     * DuckDB `//` on non-negative operands. */
   def intDiv(num: Column, den: Column): Column =

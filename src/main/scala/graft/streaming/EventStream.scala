@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 
 /** Structured Streaming restatement of the reference's incremental
   * patterns (SURVEY.md §2.9): the reference is pure batch with manual
@@ -13,23 +12,6 @@ import org.apache.spark.sql.types._
   * scale without re-reading history.
   */
 object EventStream {
-
-  /** Parquet schema of the events table as written (ts = nanos int64,
-    * read under nanosAsLong — see graft.core.Tables.events). */
-  val rawSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", LongType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
-
-  /** File-source stream over a directory of event parquet files,
-    * normalized to a proper event-time column. */
-  def readEvents(spark: SparkSession, dir: String,
-                 glob: String = "events.parquet"): DataFrame =
-    spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", glob)
-      .parquet(dir)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
 
   /** Tumbling event-time window aggregation with a late-data watermark:
     * the streaming twin of the per-day batch aggregates (EP2). State is
@@ -146,97 +128,85 @@ object EventStream {
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("fp")
 
-  /** One LSH band-bucket's state: member ids seen inside the horizon,
-    * plus the member COUNT including members dropped after overflow —
+  /** One near-dup bucket's state: `(id, payload)` members seen inside
+    * the horizon — the payload is what the twin's pair rule compares —
+    * plus the member COUNT including members dropped after overflow:
     * the cap must keep counting or a hot bucket would re-arm below the
     * cap the moment its list is cleared. */
-  final case class BucketState(ids: List[Long], n: Int, overflowed: Boolean)
+  final case class BucketState(members: List[(Long, Array[Long])], n: Int,
+                               overflowed: Boolean)
 
-  /** Streaming MinHash-LSH near-dup candidate generation — the
-    * continuous-ingest twin of [[graft.llm.Dedup.minhashLshCandidates]]
-    * (q30's operator): documents arriving on a stream emit candidate
-    * pairs against every document that shares an LSH band bucket
-    * within the watermark horizon.
+  /** The bucket operator both near-dup twins run: `keyed` rows
+    * `(id, ts, key_index, key, payload: array<bigint>)` are grouped by
+    * `(key_index, key)` in `flatMapGroupsWithState`, and a new member
+    * emits `(id_a < id_b, v)` against each existing member for which
+    * `pair(key_index, mine, theirs)` returns `v >= 0`. The rule is what
+    * makes each pair come out once, from ONE of the buckets it shares.
+    *  - Late rows (behind the watermark) are dropped here — the engine
+    *    does not filter them for this operator, and a timeout computed
+    *    from a straggler's event time would be behind the watermark,
+    *    so `setTimeoutTimestamp` would throw and kill the query.
+    *  - Replay guard: a member already in the bucket emits nothing
+    *    again (the batch input is one row per id).
+    *  - `maxBucketSize` is the batch cap's degenerate-bucket guard: the
+    *    member that overflows a bucket drops its member list (state
+    *    stays O(cap)), emits ONE sentinel `(-1, key, -1)` and the bucket
+    *    goes quiet until eviction — recall loss is announced, not
+    *    silent (filter `id_a >= 0` for the pair stream). Below the cap
+    *    the pair set equals the batch set. Above it the MinHash batch
+    *    path drops the WHOLE bucket, which a stream cannot do after the
+    *    fact (it cannot unemit); the Hamming batch cap follows this
+    *    operator instead ([[graft.llm.Dedup.hammingCandidatesFromFp]]).
+    *    A pair is emitted only from its rule's bucket, so when THAT
+    *    bucket overflows the pair is lost even if both members share
+    *    another, clean bucket: recovering it would need each bucket to
+    *    see the other buckets' overflow state, which no per-key state
+    *    store can.
+    *  - A bucket is evicted once the watermark passes `idleTimeout`
+    *    past its last arrival: near-dups cluster in time on crawl feeds
+    *    (the [[streamingExactDedup]] contract); global history belongs
+    *    to the batch path.
     *
-    * Construction: the shingle set and the band rows come from the
-    * IDENTICAL batch expressions — [[graft.llm.Dedup.shingles]], then a
-    * `posexplode` of [[graft.llm.Dedup.bandHashes]], the per-row
-    * banding kernel the batch index uses — so stream and batch band
-    * hashes agree bit for bit. Buckets live in
-    * `flatMapGroupsWithState` keyed by (band, band_hash):
-    *  - a new member emits one (id_a < id_b) pair per existing member
-    *    — per band exactly once; a pair sharing several bands emits
-    *    once per band (the batch path's cross-band `distinct()` needs
-    *    a second stateful operator here; callers dedup downstream or
-    *    compare distinct sets, as StreamingSpec does);
-    *  - `maxBucketSize` is the same degenerate-bucket guard as the
-    *    batch cap: a bucket past the cap stops emitting AND drops its
-    *    member list (state stays O(cap) per bucket), keeping only the
-    *    poisoned count. Below the cap the pair set equals the batch
-    *    pair set (StreamingSpec pins set equality on the documents
-    *    corpus); above it the two sides legitimately diverge — batch
-    *    retroactively drops the WHOLE bucket, a stream cannot unemit.
-    *  - state is evicted once the watermark passes `idleTimeout` past
-    *    a bucket's last arrival — near-dups cluster in time on crawl
-    *    feeds (same contract as [[streamingExactDedup]]); global
-    *    history belongs to the batch path.
-    */
-  def streamingMinhashCandidates(docs: DataFrame, idCol: String,
-                                 textCol: String, tsCol: String,
-                                 shingleN: Int = 2, bands: Int = 16,
-                                 rows: Int = 4, maxBucketSize: Int = 500,
-                                 watermark: String = "2 hours",
-                                 idleTimeout: String = "24 hours"): DataFrame = {
-    val spark = docs.sparkSession
+    * The state schema is [[BucketState]]'s, so a checkpoint written by
+    * an operator with another state class cannot be resumed. */
+  private def bucketPairs(keyed: DataFrame, valueCol: String,
+                          maxBucketSize: Int, watermark: String,
+                          idleTimeout: String)(
+      pair: (Int, Array[Long], Array[Long]) => Int): DataFrame = {
+    val spark = keyed.sparkSession
     import spark.implicits._
-    // parity with the batch banding: a null text (null shingle array)
-    // or an empty shingle set has null band hashes, so the posexplode
-    // emits no rows for it; a null/uncastable id or a null ts is
-    // dropped up front, since the typed bucket state below decodes
-    // both as non-null
-    val banded = docs
-      .select(col(idCol).cast("long").as("id"), col(tsCol).as("ts"),
-        graft.llm.Dedup.shingles(col(textCol), shingleN).as("sh"))
-      .where(col("id").isNotNull && col("ts").isNotNull)
-      .select(col("id"), col("ts"),
-        posexplode(graft.llm.Dedup.bandHashes(col("sh"), bands, rows))
-          .as(Seq("band", "band_hash")))
-    banded
+    keyed
       .withWatermark("ts", watermark)
-      .as[(Long, java.sql.Timestamp, Int, Long)]
+      .as[(Long, java.sql.Timestamp, Int, Long, Array[Long])]
       .groupByKey(r => (r._3, r._4))
       .flatMapGroupsWithState(
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: (Int, Long),
-         arrivals: Iterator[(Long, java.sql.Timestamp, Int, Long)],
+        (bucket: (Int, Long),
+         arrivals: Iterator[(Long, java.sql.Timestamp, Int, Long, Array[Long])],
          st: GroupState[BucketState]) =>
           if (st.hasTimedOut) {
             st.remove()
             Iterator.empty
           } else {
-            // drop arrivals already behind the watermark (the engine
-            // does not filter them for this operator): they would both
-            // diverge from batch semantics and — worse — drag maxTs
-            // behind the watermark, making setTimeoutTimestamp throw
-            // and kill the query on a single straggler doc
             val wm = st.getCurrentWatermarkMs()
             var s = st.getOption.getOrElse(BucketState(Nil, 0, false))
             val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
             var maxTs = Long.MinValue
-            arrivals.foreach { case (id, ts, band, _) =>
+            arrivals.foreach { case (id, ts, _, _, mine) =>
               if (ts.getTime >= wm) {
                 maxTs = math.max(maxTs, ts.getTime)
-                // replay/duplicate-delivery guard: a member already in
-                // the bucket re-emits nothing (batch input is one row
-                // per id by construction)
-                if (!s.overflowed && !s.ids.contains(id)) {
-                  if (s.n + 1 > maxBucketSize)
+                if (!s.overflowed && !s.members.exists(_._1 == id)) {
+                  if (s.n + 1 > maxBucketSize) {
                     s = BucketState(Nil, s.n + 1, overflowed = true)
-                  else {
-                    s.ids.foreach { other =>
-                      out += ((math.min(id, other), math.max(id, other), band))
+                    out += ((-1L, bucket._2, -1))
+                  } else {
+                    s.members.foreach { case (other, theirs) =>
+                      val v = pair(bucket._1, mine, theirs)
+                      if (v >= 0)
+                        out += ((math.min(id, other), math.max(id, other), v))
                     }
-                    s = BucketState(id :: s.ids, s.n + 1, overflowed = false)
+                    s = BucketState((id, mine) :: s.members, s.n + 1,
+                      overflowed = false)
                   }
                 }
               }
@@ -249,15 +219,54 @@ object EventStream {
             }
           }
       }
-      .toDF("id_a", "id_b", "band")
+      .toDF("id_a", "id_b", valueCol)
   }
 
-  /** One Hamming-bucket's state: (id, fingerprint) members inside the
-    * horizon — the fingerprint rides along so the EXACT Hamming
-    * verification happens at emission (the streaming twin has no
-    * post-hoc verify join to lean on). */
-  final case class HashBucketState(members: List[(Long, Long)], n: Int,
-                                   overflowed: Boolean)
+  /** Streaming MinHash-LSH near-dup candidate generation — the
+    * continuous-ingest twin of [[graft.llm.Dedup.minhashLshCandidates]]
+    * (q30's operator): documents arriving on a stream emit candidate
+    * pairs against every document that shares an LSH band bucket
+    * within the watermark horizon.
+    *
+    * Construction: the shingle set and the band rows come from the
+    * IDENTICAL batch expressions — [[graft.llm.Dedup.shingles]], then a
+    * `posexplode` of [[graft.llm.Dedup.bandHashes]], the per-row
+    * banding kernel the batch index uses — so stream and batch band
+    * hashes agree bit for bit. Buckets are keyed (band, band_hash) in
+    * [[bucketPairs]], whose cap, sentinel `(-1, band_hash, -1)`, replay
+    * guard and eviction apply as stated there. Each band row carries
+    * the hashes of the bands BEFORE it, and a pair is emitted only if
+    * it shares none of them: each pair comes out once, from its first
+    * shared band, which is the batch path's cross-band `distinct()`
+    * without a second stateful operator. Below the cap the raw output
+    * equals the batch candidate set, once per pair (StreamingSpec pins
+    * it on the documents corpus). A member holds half the band hashes
+    * on average. */
+  def streamingMinhashCandidates(docs: DataFrame, idCol: String,
+                                 textCol: String, tsCol: String,
+                                 shingleN: Int = 2, bands: Int = 16,
+                                 rows: Int = 4, maxBucketSize: Int = 500,
+                                 watermark: String = "2 hours",
+                                 idleTimeout: String = "24 hours"): DataFrame = {
+    // parity with the batch banding: a null text (null shingle array)
+    // or an empty shingle set has null band hashes, so the posexplode
+    // emits no rows for it; a null/uncastable id or a null ts is
+    // dropped up front, since the typed bucket state decodes both as
+    // non-null
+    val keyed = docs
+      .select(col(idCol).cast("long").as("id"), col(tsCol).as("ts"),
+        graft.llm.Dedup.bandHashes(
+          graft.llm.Dedup.shingles(col(textCol), shingleN), bands, rows).as("bh"))
+      .where(col("id").isNotNull && col("ts").isNotNull)
+      .select(col("id"), col("ts"), col("bh"),
+        posexplode(col("bh")).as(Seq("band", "band_hash")))
+      .select(col("id"), col("ts"), col("band"), col("band_hash"),
+        slice(col("bh"), lit(1), col("band")).as("earlier"))
+    bucketPairs(keyed, "band", maxBucketSize, watermark, idleTimeout) {
+      (band, mine, theirs) =>
+        if ((0 until band).exists(i => mine(i) == theirs(i))) -1 else band
+    }
+  }
 
   /** Streaming perceptual-hash image near-dup — the continuous-ingest
     * twin of [[graft.llm.Multimodal.imageNearDupPairs]] (q80's
@@ -267,20 +276,15 @@ object EventStream {
     * multi-block combination key within the watermark horizon. Key
     * construction is [[graft.llm.Dedup.comboKeyExprs]] — bit-identical
     * with the batch join's buckets — and emission applies the SAME
-    * canonical-combo filter as the batch join (both fingerprints are
-    * in hand at emission, so the first-all-clean-combination index is
-    * computable per pair): below the bucket cap the emitted pair
-    * MULTISET equals the batch output exactly, once per pair, no
-    * downstream distinct needed (StreamingSpec pins it). Non-decodable
-    * payloads hash to NULL and drop out, as in batch. A bucket that
-    * exceeds `maxBucketSize` stops emitting pairs until watermark
-    * eviction — and says so loudly with ONE sentinel row
-    * `(id_a = -1, id_b = <bucket key>, hamming = -1)` at the overflow
-    * transition, so a downstream consumer can alert on recall loss
-    * instead of silently missing pairs (filter `id_a >= 0` for the
-    * pair stream). State and eviction follow the MinHash twin: O(cap)
-    * per bucket, idle buckets evicted once the watermark passes
-    * `idleTimeout` past their last arrival. */
+    * canonical-combo filter as the batch join, with the masks of
+    * [[graft.llm.Dedup.comboMasks]] (both fingerprints are in hand at
+    * emission, so the first-all-clean-combination index is computable
+    * per pair): below the bucket cap the emitted pair MULTISET equals
+    * the batch output exactly, once per pair, no downstream distinct
+    * needed (StreamingSpec pins it). Non-decodable payloads hash to
+    * NULL and drop out, as in batch. Cap, sentinel
+    * `(-1, <bucket key>, -1)`, replay guard and eviction are
+    * [[bucketPairs]]'s. */
   def streamingImageNearDupCandidates(media: DataFrame, idCol: String,
                                       payloadCol: String, tsCol: String,
                                       blocks: Int = 0, maxHamming: Int = 7,
@@ -321,94 +325,28 @@ object EventStream {
     // missing pairs once the stream runs
     val (nBlocks, kb, _) =
       graft.llm.Dedup.geometry(1, blocks, maxHamming, keyBlocks)
-    val spark = media.sparkSession
-    import spark.implicits._
-    // Per-combination clean masks, SAME enumeration order as
-    // comboKeyExprs: canonical combo of a pair = first index whose
-    // masked XOR is zero. Tiny (C(blocks, keyBlocks) longs), rides the
-    // closure to every executor.
-    val comboMasks: Array[Long] = locally {
-      val (widths, offsets) = graft.llm.Dedup.blockLayout(nBlocks)
-      def widthMask(w: Int): Long = if (w == 64) -1L else (1L << w) - 1
-      (0 until nBlocks).combinations(kb).map(
-        _.map(b => widthMask(widths(b)) << offsets(b)).reduce(_ | _)).toArray
-    }
-    val fp = media.select(col(idCol).cast("long").as("id"),
-        col(tsCol).as("ts"), fpExpr.as("sh"))
+    // C(blocks, keyBlocks) longs, riding the closure to every executor
+    val comboMasks = graft.llm.Dedup.comboMasks(nBlocks, kb)
+    val keyed = media
+      .select(col(idCol).cast("long").as("id"), col(tsCol).as("ts"),
+        fpExpr.as("sh"))
       .where(col("id").isNotNull && col("ts").isNotNull && col("sh").isNotNull)
-    val banded = fp.select(col("id"), col("ts"), col("sh"),
+      .select(col("id"), col("ts"), col("sh"),
         posexplode(array(
           graft.llm.Dedup.comboKeyExprs(Seq(col("sh")), nBlocks, kb): _*))
           .as(Seq("combo", "key")))
-    banded
-      .withWatermark("ts", watermark)
-      .as[(Long, java.sql.Timestamp, Long, Int, Long)]
-      .groupByKey(r => (r._4, r._5))
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (bucket: (Int, Long),
-         arrivals: Iterator[(Long, java.sql.Timestamp, Long, Int, Long)],
-         st: GroupState[HashBucketState]) =>
-          if (st.hasTimedOut) {
-            st.remove()
-            Iterator.empty
-          } else {
-            val wm = st.getCurrentWatermarkMs()
-            var s = st.getOption.getOrElse(HashBucketState(Nil, 0, false))
-            val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-            var maxTs = Long.MinValue
-            arrivals.foreach { case (id, ts, sh, _, _) =>
-              if (ts.getTime >= wm) {
-                maxTs = math.max(maxTs, ts.getTime)
-                if (!s.overflowed && !s.members.exists(_._1 == id)) {
-                  if (s.n + 1 > maxBucketSize) {
-                    s = HashBucketState(Nil, s.n + 1, overflowed = true)
-                    // loud cap: one sentinel at the overflow transition
-                    out += ((-1L, bucket._2, -1))
-                  } else {
-                    s.members.foreach { case (otherId, otherSh) =>
-                      val x = sh ^ otherSh
-                      val h = java.lang.Long.bitCount(x)
-                      // canonical-combo filter, identical to the batch
-                      // join's: emit only from the pair's FIRST
-                      // all-clean combination, so each verified pair
-                      // appears exactly once across all its shared
-                      // buckets (this bucket is clean, so a canonical
-                      // one always exists at index <= bucket._1).
-                      // ABOVE-CAP RECALL, explicitly narrowed: a pair
-                      // is emitted only from its canonical combo's
-                      // bucket — if THAT bucket overflows, the pair is
-                      // dropped even when both members co-exist in
-                      // another clean combo bucket (the pre-round-9
-                      // emit-everywhere+distinct shape would have
-                      // caught it, at the cost of duplicate state in
-                      // every shared bucket). Recovering those pairs
-                      // would need each bucket to know the OTHER
-                      // combos' overflow state, which no per-key state
-                      // store can see; the loss is announced by the
-                      // bucket's sentinel row, and below every cap the
-                      // two shapes emit identical pair sets (pinned in
-                      // StreamingSpec).
-                      if (h <= maxHamming &&
-                          comboMasks.indexWhere(m => (x & m) == 0L) == bucket._1)
-                        out += ((math.min(id, otherId),
-                          math.max(id, otherId), h))
-                    }
-                    s = HashBucketState((id, sh) :: s.members, s.n + 1,
-                      overflowed = false)
-                  }
-                }
-              }
-            }
-            if (maxTs == Long.MinValue) Iterator.empty
-            else {
-              st.update(s)
-              st.setTimeoutTimestamp(maxTs, idleTimeout)
-              out.iterator
-            }
-          }
-      }
-      .toDF("id_a", "id_b", "hamming")
+      .select(col("id"), col("ts"), col("combo"), col("key"),
+        array(col("sh")).as("fp"))
+    bucketPairs(keyed, "hamming", maxBucketSize, watermark, idleTimeout) {
+      (combo, mine, theirs) =>
+        val x = mine(0) ^ theirs(0)
+        val h = java.lang.Long.bitCount(x)
+        // the batch join's canonical-combo filter: emit only from the
+        // pair's FIRST all-clean combination (this bucket is clean, so
+        // one exists at an index <= combo)
+        if (h <= maxHamming && comboMasks.indexWhere(m => (x & m) == 0L) == combo) h
+        else -1
+    }
   }
 
   /** Stream-stream INTERVAL join: each tap (left) enriched with the
@@ -458,9 +396,6 @@ object EventStream {
         col("tap_ts"), col("fu_id"), col("fu_type"), col("fu_ts"))
   }
 
-  /** Drive a streaming query to completion over the (static) test
-    * directory via a memory sink — how StreamingSpec observes results
-    * synchronously. Returns the collected sink table. */
   final case class FirstSeen(key: String, n_rows: Long,
                              create_us: Long, update_us: Long)
 
@@ -539,6 +474,9 @@ object EventStream {
       }
   }
 
+  /** Drive a streaming query to completion over the (static) test
+    * directory via a memory sink — how StreamingSpec observes results
+    * synchronously. Returns the collected sink table. */
   def runToMemorySink(spark: SparkSession, agg: DataFrame,
                       queryName: String, outputMode: OutputMode): DataFrame = {
     val q = agg.writeStream

@@ -483,11 +483,13 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming MinHash banding emits exactly the batch candidate pair set") {
     // the continuous-ingest twin of q30's operator: same shingle
     // expression, the same band hashes (Dedup.bandHashes, the one
-    // banding kernel), band buckets in flatMapGroupsWithState.
-    // Set equality against the batch generator over the whole corpus
-    // is the end-to-end parity proof — a single diverging hash value
-    // moves a document to a different bucket and breaks it. LlmSpec's
-    // brute-force test already proves the batch set correct.
+    // banding kernel), band buckets in flatMapGroupsWithState, each
+    // pair emitted from its first shared band only — so the RAW output
+    // is once per pair, no downstream distinct. Equality against the
+    // batch generator over the whole corpus is the end-to-end parity
+    // proof — a single diverging hash value moves a document to a
+    // different bucket and breaks it. LlmSpec's brute-force test
+    // already proves the batch set correct.
     val sfDir = SparkTestBase.sf
     val docSchema = spark.read.parquet(s"$sfDir/documents.parquet").schema
     // synthetic event time from doc_id: deterministic, all rows well
@@ -498,11 +500,15 @@ class StreamingSpec extends AnyFunSuite {
       .option("pathGlobFilter", "documents.parquet")
       .parquet(sfDir)
       .withColumn("ts", timestamp_micros(lit(1700000000000000L) + col("doc_id") * 1000000L))
-    val got = EventStream.runToMemorySink(spark,
+    val raw = EventStream.runToMemorySink(spark,
         EventStream.streamingMinhashCandidates(stream, "doc_id", "text", "ts"),
         "minhash_stream", OutputMode.Append())
-      .select($"id_a", $"id_b").distinct()
-      .as[(Long, Long)].collect().toSet
+      .select($"id_a", $"id_b")
+      .as[(Long, Long)].collect().toSeq
+    assert(!raw.exists(_._1 < 0), "no overflow sentinels expected at cap 500")
+    assert(raw.size == raw.toSet.size,
+      s"duplicate emissions: ${raw.groupBy(identity).filter(_._2.size > 1).keys.take(5)}")
+    val got = raw.toSet
     val want = graft.llm.Dedup
       .minhashLshCandidates(Tables.documents(spark, sfDir), "doc_id", "text")
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
@@ -699,9 +705,11 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming MinHash bucket cap poisons hot buckets and bounds state") {
-    // 4 identical docs with cap 3: members 1..3 emit C(3,2)=3 pairs per
-    // band; member 4 overflows — no new pairs, list dropped. Identical
-    // docs share EVERY band, so per-band counts multiply by 16 bands.
+    // 4 identical docs with cap 3: members 1..3 emit C(3,2)=3 pairs,
+    // once each from their first shared band (band 0); member 4
+    // overflows — no new pairs, list dropped. Identical docs share
+    // EVERY band, so each of the 16 band buckets overflows and says so
+    // with one (-1, band_hash, -1) sentinel.
     val dir = Files.createTempDirectory("graft_stream_mh")
     writeEventFile(dir, "p0.parquet", 0, Seq(
       ("2024-01-01 10:00:00", 1L, "alpha beta gamma delta", 1.0),
@@ -714,10 +722,15 @@ class StreamingSpec extends AnyFunSuite {
           "user_id", "event_type", "ts", maxBucketSize = 3),
         "minhash_cap_stream", OutputMode.Append())
       .select($"id_a", $"id_b", $"band").as[(Long, Long, Int)].collect()
-    assert(got.length == 3 * 16, s"3 pairs x 16 bands, got ${got.length}")
-    assert(got.map(r => (r._1, r._2)).toSet ==
-      Set((1L, 2L), (1L, 3L), (2L, 3L)),
-      "doc 4 must emit nothing after the bucket poisons")
+    val (sentinels, pairs) = got.toSeq.partition(_._1 < 0)
+    assert(pairs.sorted == Seq((1L, 2L, 0), (1L, 3L, 0), (2L, 3L, 0)),
+      s"3 pairs once each from band 0, doc 4 none after the poison: $pairs")
+    val bandHashes = Seq("alpha beta gamma delta").toDF("t")
+      .select(graft.llm.Dedup.bandHashes(graft.llm.Dedup.shingles($"t", 2)))
+      .as[Seq[Long]].head()
+    assert(sentinels.map(_._2).sorted == bandHashes.sorted &&
+      sentinels.forall(r => r._1 == -1L && r._3 == -1),
+      s"one sentinel per band bucket: ${sentinels.toSeq}")
   }
 
   test("streamingExactDedup emits one row per canonical fingerprint") {
